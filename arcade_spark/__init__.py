@@ -4,8 +4,8 @@ lightweight-compression engine with the capabilities of madgik/arcade
 
 Not a port: the reference (/root/reference, C++20) is a single-file,
 single-threaded columnar format; this engine re-expresses the same
-semantics Spark-first — encoded-blocks + manifest tables, Arrow-batched
-``mapInPandas`` kernels, Catalyst-driven zone-map pruning — and extends
+semantics Spark-first — encoded-blocks + manifest tables, per-partition
+``mapInArrow`` kernels, zone-map pruning over chunk metadata — and extends
 the codec set per the north star (RLE, FSST, bit-packing,
 frame-of-reference) with a greedy cost-model selector that replicates
 ARCADE's adaptive-dictionary decision logic (reference: writer.cpp:48-376).

@@ -1,33 +1,26 @@
 """Files-mode read path: per-partition tasks reading their own encoded
 column files with pyarrow IN-PROCESS — the read-side mirror of
-``encode_files_job`` (the 100 TB fast path).
+``encode_files_job`` (the 100 TB fast path) and the only read route.
 
-Why this exists (and is the default): the encoded table is one parquet
-file per (partition, column) (manifest.PartWriter), so every read
-operator can be expressed as "each task owns one partition's files":
+The encoded table is one parquet file per (partition, column)
+(manifest.PartWriter), so every read operator can be expressed as
+"each task owns one partition's files":
 
     driver: manifest read (tiny) → assignment list [(part_id,)]
       → sc.parallelize(items, len(items))      [1:1, no balls-in-bins]
       → mapInArrow(part kernel)                [pyarrow reads, numpy prune]
 
-vs the plan-mode pipeline (kept as ``mode="plan"`` in readops/decode):
-
-    JVM parquet scan → zone filter → repartition shuffle → Arrow IPC
-    → python kernel
-
-Measured on this class of workload, the JVM→Python Arrow IPC alone
-costs ~13 ns/byte/core — 3× the decode kernels — and plan mode adds a
-shuffle of the blob bytes plus (for filters) a second metadata scan +
-broadcast join for the per-block verdict. Files mode removes all three:
+No blob bytes cross the JVM→Python boundary (an Arrow IPC measured at
+~13 ns/byte/core — 3× the decode kernels; docs/PLANS.md §5):
 
 - **zero shuffle** for scan / filter / random_access (group_count keeps
   one O(distinct) partial-merge shuffle);
 - **zone pruning in numpy** on the chunk-metadata columns (a few KB per
   partition — parquet column pruning reads no payload bytes);
 - **match-level late materialization**: projection blobs are fetched
-  (by parquet row group) only for blocks with actual filter MATCHES —
-  strictly tighter than the plan-mode zone-level verdict;
-- dictionary replay still ships segments only (seg column reads).
+  (by parquet row group) only for blocks with actual filter MATCHES,
+  not every block the zone maps admit;
+- dictionary replay still reads segments only (seg column reads).
 
 At cluster scale the same shape holds: Spark distributes part ids with
 retries/locality, tasks read their own files from shared storage
@@ -52,7 +45,14 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 
+from arcade_spark.bits import unpack_sections, unpack_uints, unpack_validity
+from arcade_spark.codecs import strcodecs as sc
+from arcade_spark.codecs.intcodecs import decode_for_int
+from arcade_spark.core import decode_int_block
+from arcade_spark.gdict import GlobalDictDecoder
 from arcade_spark.manifest import FORMAT_REV, blocks_path
+from arcade_spark.postpass import unpost
+from arcade_spark.predicates import _complement_positions, _Pred
 
 # chunk-metadata columns (everything but blob/seg): reading these per
 # column file touches KB, not payload bytes
@@ -239,9 +239,10 @@ class _ColFile:
 
 
 def _zone_keep_np(pred, cm: _ColMeta) -> np.ndarray:
-    """Per-block zone verdict for one compiled predicate (numpy twin of
-    readops._Pred.zone_keep_expr). Missing zone info ⇒ keep (pruning is
-    an optimization, never a correctness gate).
+    """Per-block zone verdict for one compiled predicate, from its zone
+    bounds (``lob``/``hib`` for strings, ``zone_lo``/``zone_hi`` for
+    integer lanes). Missing zone info ⇒ keep (pruning is an
+    optimization, never a correctness gate).
 
     Negated predicates prune only when the zone PROVES every valid row
     matches the inner predicate (complement = empty): a single-key zone
@@ -525,8 +526,6 @@ def _part_match_positions(
             blobs = cf.payloads(idxs, "blob")
             segs = cf.payloads(seg_rows, "seg")
             states = [(j, p, p.new_state()) for j, p in plist]
-            from arcade_spark.readops import _complement_positions
-
             for b in range(last + 1):
                 meta = cm.meta_dict(b, segs.get(b, b""))
                 blob = blobs.get(b)
@@ -592,7 +591,6 @@ def filter_parts(
       (each inner list is a conjunction; columns may repeat anywhere).
 
     All three lower to the same DNF kernel."""
-    from arcade_spark.readops import _Pred
     from arcade_spark.schema import spark_type_for
 
     if (preds_spec is None) == (dnf_spec is None):
@@ -744,6 +742,26 @@ def _scan_part_batches(
             yield pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
+def _random_access_targets(out_dir: str, row_ids: list[int]):
+    """Global rowid → per-partition local positions via the manifest
+    prefix sums (the ``blocksizes`` index analogue, reader.cpp:113-115).
+    Driver-side metadata math only."""
+    manifest = pq.read_table(os.path.join(out_dir, "manifest"),
+                             columns=["part_id", "n_rows"])
+    parts = sorted(zip(manifest.column("part_id").to_pylist(),
+                       manifest.column("n_rows").to_pylist()))
+    part_ids = [p for p, _ in parts]
+    offsets = np.concatenate([[0], np.cumsum([n for _, n in parts])])
+
+    targets: dict[int, list[tuple[int, int]]] = {}
+    for rid in row_ids:
+        pi = int(np.searchsorted(offsets, rid, side="right")) - 1
+        if pi < 0 or pi >= len(part_ids) or rid >= offsets[pi + 1]:
+            raise IndexError(f"row id {rid} out of range")
+        targets.setdefault(part_ids[pi], []).append((rid - int(offsets[pi]), rid))
+    return targets
+
+
 def random_access_parts(
     spark: SparkSession,
     out_dir: str,
@@ -753,7 +771,6 @@ def random_access_parts(
     """Files-mode point lookup: tasks launch ONLY for touched
     partitions, read metadata, then fetch exactly the touched blocks'
     blobs (+ stateful segs before them) — reader.cpp:69-143."""
-    from arcade_spark.readops import _random_access_targets
     from arcade_spark.schema import spark_type_for
 
     all_cols, _parts = load_manifest(out_dir)
@@ -897,8 +914,6 @@ def key_rowid_parts(
     equi-match but outer joins must preserve them.
 
     Returns (df with columns ``k0..kn, rid``, list of key vtypes)."""
-    from arcade_spark.readops import _Pred
-
     key_cols = [key_col] if isinstance(key_col, str) else list(key_col)
     if not key_cols:
         raise ValueError("key_col must name at least one column")
@@ -1079,11 +1094,18 @@ def materialize_rowids_parts(
     rid stream (two more exchanges + a sort-merge join, plus a second
     execution of the rid-producing subtree) gets the attachment for
     the cost of one extra int64 lane. Output columns: row_id,
-    *carry, *project."""
+    *carry, *project — a carry named ``row_id`` or like a projected
+    column raises ValueError rather than duplicating an output field."""
     from arcade_spark.schema import spark_type_for
     from pyspark.sql import functions as F
 
     carry = list(carry or [])
+    clash = sorted(set(carry) & ({"row_id"} | set(project)))
+    if clash:
+        raise ValueError(
+            f"carry lanes collide with output columns: {clash} — rename "
+            "the carried lanes"
+        )
     all_cols, parts = load_manifest(out_dir)
     missing = [c for c in project if c not in dict(all_cols)]
     if missing:
@@ -1164,6 +1186,100 @@ def materialize_rowids_parts(
     return tagged.groupBy("part_id", "split").applyInArrow(fn, schema=ddl)
 
 
+def _int_chunk_counts(blob, meta: dict, is_float: bool):
+    """Per-chunk (values, counts) partial for integer-family group
+    counts. Doubles group by canonicalized bit pattern: -0.0 folds into
+    +0.0 and every NaN payload collapses to the quiet-NaN pattern, so
+    grouping matches SQL value-equality semantics."""
+    iblock = decode_int_block(blob, meta)
+    v = iblock.values
+    if iblock.validity is not None:
+        v = v[iblock.validity]
+    if len(v) == 0:
+        return None
+    if is_float:
+        v = v.copy()
+        f = v.view(np.float64)
+        v[f == 0.0] = 0  # catches both ±0.0 (IEEE equality)
+        v[np.isnan(f)] = np.int64(0x7FF8000000000000)
+    vals, cnts = np.unique(v, return_counts=True)
+    if is_float:
+        vals = vals.view(np.float64)
+    return vals, cnts
+
+
+def _str_chunk_codes(gdec: GlobalDictDecoder, blob, meta: dict):
+    """Per-chunk (codes, validity, resolve) for string group-by kernels:
+    ``codes`` is an int64 per-row code array, ``resolve(used_codes)``
+    maps code ids to value bytes (object array). Dict/RLE paths hand
+    back the stored codes without materializing any strings; plain/fsst
+    blocks factorize the materialized values (dictionaries lost the
+    codec race there, so the strings exist anyway)."""
+    validity_sec, payload = unpack_sections(blob)
+    payload = unpost(payload, meta.get("post"))
+    codec = meta["codec"]
+    n = meta["n_values"]
+    if meta.get("gdict_reset"):
+        gdec.reset()
+    validity = unpack_validity(validity_sec, n)
+
+    if codec in ("dict_global", "dict_local"):
+        if codec == "dict_global":
+            gdec.append(sc._deserialize_values_arrow(meta["seg"]))
+            dictionary = None  # resolve through the running dict
+        else:
+            dictionary = sc._deserialize_values_arrow(meta["seg"])
+            if meta.get("gdict_seed"):
+                gdec.append(dictionary)
+        codes = unpack_uints(payload, meta["code_width"], n).view(np.int64)
+
+        def resolve(used: np.ndarray) -> np.ndarray:
+            if dictionary is None:
+                return gdec.take_block(used).to_object_array()
+            return sc._take_to_block(dictionary, used).to_object_array()
+
+        return codes, validity, resolve
+    if codec == "rle_str":
+        import struct
+
+        dict_sec, codes_sec, lens_sec = unpack_sections(payload)
+        uniques = sc._deserialize_values_arrow(dict_sec)
+        (nruns,) = struct.unpack_from("<I", codes_sec, 0)
+        run_codes = unpack_uints(codes_sec[4:], meta["code_width"], nruns).view(np.int64)
+        run_lens = np.asarray(decode_for_int(lens_sec, {"n_values": nruns}),
+                              dtype=np.int64)
+        codes = np.repeat(run_codes, run_lens)
+
+        def resolve(used: np.ndarray) -> np.ndarray:
+            return sc._take_to_block(uniques, used).to_object_array()
+
+        return codes, validity, resolve
+    # plain / fsst: factorize the materialized values
+    block = sc.decode_plain(payload, meta) if codec == "plain" else sc.decode_fsst(payload, meta)
+    obj = block.to_object_array()
+    obj = np.where(obj == None, b"", obj)  # noqa: E711 (masked by validity)
+    uniq, codes = np.unique(obj, return_inverse=True)
+
+    def resolve(used: np.ndarray) -> np.ndarray:
+        return uniq[used]
+
+    return codes.astype(np.int64), validity, resolve
+
+
+def _str_chunk_counts(gdec: GlobalDictDecoder, blob, meta: dict):
+    """Per-chunk (values, counts) partial for string group counts —
+    decode-free on dict/rle paths: bincount the bit-packed codes and
+    resolve only the few used codes through the (running) dictionary."""
+    codes, validity, resolve = _str_chunk_codes(gdec, blob, meta)
+    if validity is not None:
+        codes = codes[validity]
+    if len(codes) == 0:
+        return None
+    cnt = np.bincount(codes)
+    used = np.nonzero(cnt)[0]
+    return resolve(used), cnt[used]
+
+
 def group_count_partials(
     spark: SparkSession, out_dir: str, column: str
 ) -> tuple[DataFrame, str]:
@@ -1182,7 +1298,6 @@ def group_count_partials(
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from arcade_spark.decode import _binary_views
         from arcade_spark.gdict import GlobalDictDecoder
-        from arcade_spark.readops import _int_chunk_counts, _str_chunk_counts
 
         for batch in batches:
             for pid in batch.column("part_id").to_pylist():
@@ -1258,7 +1373,6 @@ def group_sum_partials(
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from arcade_spark.core import decode_int_block
         from arcade_spark.gdict import GlobalDictDecoder
-        from arcade_spark.readops import _str_chunk_codes
 
         for batch in batches:
             for pid in batch.column("part_id").to_pylist():
@@ -1379,7 +1493,6 @@ def group_by_partials(
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from arcade_spark.core import decode_int_block
         from arcade_spark.gdict import GlobalDictDecoder
-        from arcade_spark.readops import _str_chunk_codes
 
         for batch in batches:
             for pid in batch.column("part_id").to_pylist():
@@ -1508,8 +1621,6 @@ def filter_group_by_partials(
     partials — the classic warehouse query shape (TPC-H Q1) without
     materializing a single matched row. Same output contract as
     group_by_partials."""
-    from arcade_spark.readops import _Pred
-
     all_cols, parts = load_manifest(out_dir)
     cols = dict(all_cols)
     if not group_cols:
@@ -1544,7 +1655,6 @@ def filter_group_by_partials(
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from arcade_spark.core import decode_int_block, replay_str_block
         from arcade_spark.gdict import GlobalDictDecoder
-        from arcade_spark.readops import _str_chunk_codes
 
         for batch in batches:
             for pid in batch.column("part_id").to_pylist():
@@ -1787,8 +1897,6 @@ def filter_group_by_multi_partials(
     partials) and count counts every matched row — the grouping-sets
     operator needs this, since a rolled-up level must keep rows that
     are null in an unrelated group column."""
-    from arcade_spark.readops import _Pred
-
     all_cols, parts = load_manifest(out_dir)
     cols = dict(all_cols)
     if not group_cols:
@@ -1839,7 +1947,6 @@ def filter_group_by_multi_partials(
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from arcade_spark.core import decode_int_block, replay_str_block
         from arcade_spark.gdict import GlobalDictDecoder
-        from arcade_spark.readops import _str_chunk_codes
 
         for batch in batches:
             for pid in batch.column("part_id").to_pylist():

@@ -1,11 +1,11 @@
 """Read operators over the encoded-blocks table:
 
 - ``equi_filter`` — ArcadeReader::equi_filter (reader.cpp:7-66,
-  process.cpp:182-422): zone-map block pruning decided in the DataFrame
-  plan (Catalyst pushes the min/max predicate to parquet row-group
-  stats), then an Arrow-batched kernel that compares dictionary CODES —
+  process.cpp:182-422): per-partition zone-map block pruning over the
+  chunk metadata, then a kernel that compares dictionary CODES —
   integer compare, no string materialization — with late
-  materialization of projected columns at matched positions only.
+  materialization of projected columns at matched positions only
+  (partread.filter_parts, predicates._Pred).
 - ``random_access`` — ArcadeReader::random_access (reader.cpp:69-143):
   rowid → (partition, block, position) via the manifest prefix sums
   (the analogue of the ``blocksizes`` index, reader.cpp:113-115), then
@@ -26,19 +26,11 @@ import os
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from arcade_spark.bits import unpack_sections, unpack_uints, unpack_validity
-from arcade_spark.codecs import strcodecs as sc
-from arcade_spark.codecs.intcodecs import decode_for_int
-from arcade_spark.convert import block_to_series
-from arcade_spark.core import decode_int_block, decode_str_block
-from arcade_spark.postpass import unpost
-from arcade_spark.decode import num_parts as _num_parts
-from arcade_spark.decode import read_blocks, table_columns
-from arcade_spark.gdict import GlobalDictDecoder
+from arcade_spark.decode import table_columns
+from arcade_spark.partread import filter_parts
 from arcade_spark.schema import spark_type_for
 
 
@@ -70,372 +62,6 @@ def _register_key_cache(df: DataFrame) -> None:
     _KEY_CACHES.append(df)
 
 
-def _meta_from_row(row) -> dict:
-    return {
-        "codec": row.codec,
-        "post": row.post,
-        "n_values": int(row.n_values),
-        "code_width": int(row.code_width),
-        "global_start": int(row.global_start),
-        "gdict_reset": bool(row.gdict_reset),
-        "gdict_seed": bool(row.gdict_seed),
-        "seg": row.seg if row.seg is not None else b"",
-    }
-
-
-def _searchsorted_bytes(sorted_obj: np.ndarray, value: bytes) -> int:
-    """Index of value in a sorted object array of bytes, or -1."""
-    i = int(np.searchsorted(sorted_obj, value))
-    if i < len(sorted_obj) and sorted_obj[i] == value:
-        return i
-    return -1
-
-
-class _StrFilterState:
-    """Per-(part, column) filter state: running dict replay + the
-    memoized global code of the target value (ARCADE's carried offset,
-    recomputed only after a dict reset — process.cpp:241)."""
-
-    def __init__(self, value: bytes):
-        self.value = value
-        self.gdec = GlobalDictDecoder()
-        self.target_gid = -1
-
-    def _absorb_segment(self, segment) -> None:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        if self.target_gid < 0 and len(segment):
-            idx = int(
-                pc.index(segment, pa.scalar(self.value, type=pa.large_binary())).as_py()
-            )
-            if idx >= 0:
-                self.target_gid = len(self.gdec) + idx
-        self.gdec.append(segment)
-
-    def match_positions(self, blob, meta: dict) -> np.ndarray:
-        """Positions of rows equal to the target value in this block;
-        advances replay state either way."""
-        validity_sec, payload = unpack_sections(blob)
-        payload = unpost(payload, meta.get("post"))
-        codec = meta["codec"]
-        if meta.get("gdict_reset"):
-            self.gdec.reset()
-            self.target_gid = -1
-        n = meta["n_values"]
-
-        if codec == "dict_global":
-            self._absorb_segment(sc._deserialize_values_arrow(meta["seg"]))
-            if self.target_gid < 0:
-                return np.empty(0, dtype=np.int64)
-            codes = unpack_uints(payload, meta["code_width"], n).view(np.int64)
-            pos = np.nonzero(codes == self.target_gid)[0]
-        elif codec == "dict_local":
-            uniques = sc._deserialize_values_arrow(meta["seg"])
-            if meta.get("gdict_seed"):
-                self._absorb_segment(uniques)
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-            code = int(
-                pc.index(uniques, pa.scalar(self.value, type=pa.large_binary())).as_py()
-            )
-            if code < 0:
-                return np.empty(0, dtype=np.int64)
-            codes = unpack_uints(payload, meta["code_width"], n).view(np.int64)
-            pos = np.nonzero(codes == code)[0]
-        elif codec == "rle_str":
-            dict_sec, codes_sec, lens_sec = unpack_sections(payload)
-            uniques = sc._deserialize_values(dict_sec)
-            code = _searchsorted_bytes(uniques, self.value)
-            if code < 0:
-                return np.empty(0, dtype=np.int64)
-            import struct
-
-            (nruns,) = struct.unpack_from("<I", codes_sec, 0)
-            run_codes = unpack_uints(codes_sec[4:], meta["code_width"], nruns).view(np.int64)
-            run_lens = decode_for_int(lens_sec, {"n_values": nruns})
-            pos = np.nonzero(np.repeat(run_codes == code, run_lens))[0]
-        else:  # plain / fsst: materialize then byte-compare
-            if codec == "plain":
-                block = sc.decode_plain(payload, meta)
-            else:
-                block = sc.decode_fsst(payload, meta)
-            obj = block.to_object_array()
-            pos = np.nonzero(obj == self.value)[0]
-
-        validity = unpack_validity(validity_sec, n)
-        if validity is not None and len(pos):
-            pos = pos[validity[pos]]
-        return pos
-
-    def replay(self, meta: dict) -> None:
-        """Advance replay state from the segment alone — pruned chunks
-        ship ``seg`` but a NULL blob (FORMAT_REV 6 split)."""
-        if meta.get("gdict_reset"):
-            self.gdec.reset()
-            self.target_gid = -1
-        codec = meta["codec"]
-        if codec == "dict_global" or (codec == "dict_local" and meta.get("gdict_seed")):
-            self._absorb_segment(sc._deserialize_values_arrow(meta["seg"]))
-
-
-class _MaskState:
-    """Shared replay skeleton for dictionary-mask string predicates (IN,
-    BETWEEN, prefix/contains/suffix). A concrete class supplies
-    ``_flags(arr) -> bool[n]`` evaluating the predicate over dictionary
-    ENTRIES (Arrow C-side — no Python objects per entry); blocks then
-    match through their bit-packed codes against a growing per-entry
-    bitmask of the running global dictionary — O(dict) string work total,
-    O(n) integer mask-gather per block, no string materialization. This
-    is the dictionary-encoding payoff ARCADE's code-compare exploits for
-    equality (process.cpp:241), generalized to any per-value predicate.
-    plain/fsst blocks (where dictionaries lost) materialize and run the
-    same Arrow kernel over the block values."""
-
-    def __init__(self):
-        self.mask = np.zeros(0, dtype=bool)
-
-    def _flags(self, arr) -> np.ndarray:  # pragma: no cover - abstract
-        raise NotImplementedError
-
-    def _absorb_segment(self, segment) -> None:
-        if len(segment):
-            self.mask = np.concatenate([self.mask, self._flags(segment)])
-
-    def match_positions(self, blob, meta: dict) -> np.ndarray:
-        validity_sec, payload = unpack_sections(blob)
-        payload = unpost(payload, meta.get("post"))
-        codec = meta["codec"]
-        if meta.get("gdict_reset"):
-            self.mask = np.zeros(0, dtype=bool)
-        n = meta["n_values"]
-
-        if codec == "dict_global":
-            self._absorb_segment(sc._deserialize_values_arrow(meta["seg"]))
-            if not self.mask.any():
-                return np.empty(0, dtype=np.int64)
-            codes = unpack_uints(payload, meta["code_width"], n).view(np.int64)
-            pos = np.nonzero(self.mask[codes])[0]
-        elif codec == "dict_local":
-            uniques = sc._deserialize_values_arrow(meta["seg"])
-            if meta.get("gdict_seed"):
-                self._absorb_segment(uniques)
-            flags = self._flags(uniques)
-            if not flags.any():
-                return np.empty(0, dtype=np.int64)
-            codes = unpack_uints(payload, meta["code_width"], n).view(np.int64)
-            pos = np.nonzero(flags[codes])[0]
-        elif codec == "rle_str":
-            dict_sec, codes_sec, lens_sec = unpack_sections(payload)
-            uniques = sc._deserialize_values_arrow(dict_sec)
-            flags = self._flags(uniques)
-            if not flags.any():
-                return np.empty(0, dtype=np.int64)
-            import struct
-
-            (nruns,) = struct.unpack_from("<I", codes_sec, 0)
-            run_codes = unpack_uints(codes_sec[4:], meta["code_width"], nruns).view(np.int64)
-            run_lens = decode_for_int(lens_sec, {"n_values": nruns})
-            pos = np.nonzero(np.repeat(flags[run_codes], run_lens))[0]
-        else:  # plain / fsst: materialize, same Arrow kernel on values
-            import pyarrow as pa
-
-            if codec == "plain":
-                block = sc.decode_plain(payload, meta)
-            else:
-                block = sc.decode_fsst(payload, meta)
-            obj = block.to_object_array()
-            # null slots decode to None — substitute b"" (validity
-            # gating below removes them)
-            obj = np.where(obj == None, b"", obj)  # noqa: E711
-            arr = pa.array(obj, type=pa.large_binary())
-            pos = np.nonzero(self._flags(arr))[0]
-
-        validity = unpack_validity(validity_sec, n)
-        if validity is not None and len(pos):
-            pos = pos[validity[pos]]
-        return pos
-
-    def replay(self, meta: dict) -> None:
-        if meta.get("gdict_reset"):
-            self.mask = np.zeros(0, dtype=bool)
-        codec = meta["codec"]
-        if codec == "dict_global" or (codec == "dict_local" and meta.get("gdict_seed")):
-            self._absorb_segment(sc._deserialize_values_arrow(meta["seg"]))
-
-
-class _StrInState(_MaskState):
-    """IN-list: Arrow C-side set membership over dictionary entries (the
-    multi-value generalization of _StrFilterState's carried offset)."""
-
-    def __init__(self, values: list[bytes]):
-        super().__init__()
-        self.values = sorted(set(values))
-
-    def _flags(self, arr) -> np.ndarray:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        if len(arr) == 0:
-            return np.zeros(0, dtype=bool)
-        vals = pa.array(self.values, type=pa.large_binary())
-        return pc.is_in(arr, value_set=vals).to_numpy(zero_copy_only=False).astype(bool)
-
-
-class _StrRangeState(_MaskState):
-    """BETWEEN: Arrow C-side bound compares over dictionary entries."""
-
-    def __init__(self, lo: bytes, hi: bytes):
-        super().__init__()
-        self.lo = lo
-        self.hi = hi
-
-    def _flags(self, arr) -> np.ndarray:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        if len(arr) == 0:
-            return np.zeros(0, dtype=bool)
-        lo = pa.scalar(self.lo, type=pa.large_binary())
-        hi = pa.scalar(self.hi, type=pa.large_binary())
-        m = pc.and_(pc.greater_equal(arr, lo), pc.less_equal(arr, hi))
-        return m.to_numpy(zero_copy_only=False).astype(bool)
-
-
-_RE2_META = set(b"\\+*?()|[]{}^$.#&~-")
-
-
-def _like_to_regex(pattern: bytes) -> bytes:
-    """SQL LIKE pattern → anchored RE2: ``%`` → ``.*``, ``_`` → ``.``,
-    everything else escaped byte-wise. ``(?s)`` so ``_``/``%`` match
-    newline bytes too (SQL wildcards are byte wildcards). No escape
-    character (``\\%``) — use filter_contains for literal percent
-    signs."""
-    out = bytearray(b"(?s)^")
-    for byte in pattern:
-        b = bytes([byte])
-        if b == b"%":
-            out += b".*"
-        elif b == b"_":
-            out += b"."
-        elif byte in _RE2_META:
-            out += b"\\" + b
-        else:
-            out += b
-    out += b"$"
-    return bytes(out)
-
-
-def _like_literal_prefix(pattern: bytes) -> bytes:
-    """The literal prefix of a LIKE pattern before the first wildcard
-    (may be empty) — the zone-prunable part."""
-    for i, byte in enumerate(pattern):
-        if byte in (0x25, 0x5F):  # % _
-            return pattern[:i]
-    return pattern
-
-
-class _StrLikeState(_MaskState):
-    """Full SQL LIKE: the translated RE2 runs once per dictionary
-    ENTRY (Arrow match_substring_regex); rows match through codes."""
-
-    def __init__(self, pattern: bytes):
-        super().__init__()
-        self.regex = _like_to_regex(pattern)
-
-    def _flags(self, arr) -> np.ndarray:
-        import pyarrow.compute as pc
-
-        if len(arr) == 0:
-            return np.zeros(0, dtype=bool)
-        m = pc.match_substring_regex(arr, pattern=self.regex)
-        return m.to_numpy(zero_copy_only=False).astype(bool)
-
-
-class _StrHashSampleState(_MaskState):
-    """Deterministic hash sampling: a value matches iff
-    ``md5_60bit(value) % denominator < numerator`` (md5's first 15 hex
-    digits — the same replayable construction the fingerprint oracles
-    use, so DuckDB reproduces it exactly). On dict paths the hash runs
-    once per DISTINCT value; sampling on a unique-ish key column (url,
-    text) is row-level sampling, on a low-cardinality column it is
-    whole-group sampling — both deterministic across engines and
-    re-runs (no RNG state)."""
-
-    def __init__(self, numerator: int, denominator: int):
-        super().__init__()
-        if not (0 <= numerator <= denominator and denominator > 0):
-            raise ValueError(
-                f"need 0 <= numerator <= denominator, got "
-                f"{numerator}/{denominator}"
-            )
-        self.numer = numerator
-        self.denom = denominator
-
-    def _flags(self, arr) -> np.ndarray:
-        import hashlib
-
-        if len(arr) == 0:
-            return np.zeros(0, dtype=bool)
-        n, d = self.numer, self.denom
-        return np.array(
-            [
-                int(hashlib.md5(v).hexdigest()[:15], 16) % d < n
-                for v in arr.to_pylist()
-            ],
-            dtype=bool,
-        )
-
-
-class _StrMatchState(_MaskState):
-    """prefix / contains / suffix (``LIKE 'p%'`` / ``'%s%'`` / ``'%s'``):
-    Arrow C-side ``starts_with`` / ``match_substring`` / ``ends_with``
-    over dictionary entries — the predicate runs once per DISTINCT
-    value, then O(rows) integer code-gather, which is exactly why
-    substring search over a dict-encoded web corpus is cheap."""
-
-    _FNS = {"prefix": "starts_with", "contains": "match_substring",
-            "suffix": "ends_with"}
-
-    def __init__(self, kind: str, pattern: bytes):
-        super().__init__()
-        if not pattern:
-            raise ValueError(f"{kind} pattern must be non-empty")
-        self.kind = kind
-        self.pattern = pattern
-
-    def _flags(self, arr) -> np.ndarray:
-        import pyarrow.compute as pc
-
-        if len(arr) == 0:
-            return np.zeros(0, dtype=bool)
-        fn = getattr(pc, self._FNS[self.kind])
-        return fn(arr, pattern=self.pattern).to_numpy(zero_copy_only=False).astype(bool)
-
-
-def _dispatch_filter(
-    spark, out_dir, spec, project, count_only, mode, combine="and"
-) -> DataFrame:
-    """Route to the files-mode driver (default — per-part pyarrow
-    in-process reads, zero shuffle; partread.py) or the plan-mode
-    pipeline (Catalyst zone pruning + repartition + mapInPandas; kept
-    for blocks tables not laid out one-file-per-(part, column) and as
-    the cross-check twin in tests)."""
-    if mode == "files":
-        from arcade_spark.partread import filter_parts
-
-        return filter_parts(spark, out_dir, spec, project, count_only, combine=combine)
-    if mode != "plan":
-        raise ValueError(f"mode must be 'files' or 'plan': {mode!r}")
-    if combine != "and":
-        raise NotImplementedError(
-            "plan mode is a debug/cross-check path (README round-4): "
-            "conjunctions of eq/range/in only — use files mode"
-        )
-    return _filter_op(spark, out_dir, spec, project, count_only)
-
-
 def equi_filter(
     spark: SparkSession,
     out_dir: str,
@@ -443,13 +69,10 @@ def equi_filter(
     value,
     project: list[str] | None = None,
     count_only: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
     """``SELECT project... FROM encoded WHERE column = value``
     (ArcadeReader::equi_filter, reader.cpp:7-66)."""
-    return _dispatch_filter(
-        spark, out_dir, [(column, ("eq", value))], project, count_only, mode
-    )
+    return filter_parts(spark, out_dir, [(column, ("eq", value))], project, count_only)
 
 
 def filter_range(
@@ -460,15 +83,14 @@ def filter_range(
     hi,
     project: list[str] | None = None,
     count_only: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
     """``SELECT project... FROM encoded WHERE column BETWEEN lo AND hi``
     (inclusive). The reference lists range filters as future work
     (README.md:115-131); our sorted dictionaries + zone maps make them
     cheap: blocks prune on min/max, local/rle dicts compare a code
     range, the global dict keeps a growing in-range entry bitmask."""
-    return _dispatch_filter(
-        spark, out_dir, [(column, ("range", lo, hi))], project, count_only, mode
+    return filter_parts(
+        spark, out_dir, [(column, ("range", lo, hi))], project, count_only
     )
 
 
@@ -487,36 +109,19 @@ def _preds_to_spec(preds: list[tuple]) -> list[tuple[str, tuple]]:
     return spec
 
 
-def _complement_positions(pos: np.ndarray, blob, n: int) -> np.ndarray:
-    """VALID positions of a block not in ``pos`` — the negated-predicate
-    complement (nulls satisfy neither the inner predicate nor its
-    negation, per SQL three-valued logic)."""
-    validity_sec = unpack_sections(blob)[0]
-    validity = unpack_validity(validity_sec, n)
-    allp = (
-        np.arange(n, dtype=np.int64)
-        if validity is None
-        else np.nonzero(validity)[0].astype(np.int64)
-    )
-    return np.setdiff1d(allp, pos, assume_unique=True)
-
-
 def filter_and(
     spark: SparkSession,
     out_dir: str,
     preds: list[tuple],
     project: list[str] | None = None,
     count_only: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
     """Conjunctive filter: ``WHERE p1 AND p2 AND ...`` where each pred
     is ("eq", column, value), ("range", column, lo, hi) or ("in",
     column, values). Zone maps prune a block when ANY predicate's zone
     rules it out; the kernel intersects per-column match-position sets,
     and projection columns materialize only the intersection."""
-    return _dispatch_filter(
-        spark, out_dir, _preds_to_spec(preds), project, count_only, mode
-    )
+    return filter_parts(spark, out_dir, _preds_to_spec(preds), project, count_only)
 
 
 def filter_dnf(
@@ -525,7 +130,6 @@ def filter_dnf(
     conjuncts: list[list[tuple]],
     project: list[str] | None = None,
     count_only: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
     """Full disjunctive-normal-form filter: ``WHERE (p11 AND p12 ...)
     OR (p21 AND ...) OR ...`` — each inner list is a conjunction of
@@ -536,13 +140,6 @@ def filter_dnf(
     within a conjunct and union across conjuncts (partread kernel).
     ``filter_and`` / ``filter_or`` are the one-conjunct / singleton-
     conjunct special cases."""
-    if mode != "files":
-        raise NotImplementedError(
-            "filter_dnf is files-mode only (plan mode is a debug/"
-            "cross-check path, README round-4)"
-        )
-    from arcade_spark.partread import filter_parts
-
     return filter_parts(
         spark, out_dir, project=project, count_only=count_only,
         dnf_spec=[_preds_to_spec(c) for c in conjuncts],
@@ -555,7 +152,6 @@ def filter_or(
     preds: list[tuple],
     project: list[str] | None = None,
     count_only: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
     """Disjunctive filter: ``WHERE p1 OR p2 OR ...`` (same predicate
     forms as ``filter_and``; repeated columns allowed). Zone-envelope
@@ -563,8 +159,8 @@ def filter_or(
     column admits it, and survives overall iff any disjunct's zone
     admits it; the kernel unions per-predicate match positions, so
     projection columns still materialize matched positions only."""
-    return _dispatch_filter(
-        spark, out_dir, _preds_to_spec(preds), project, count_only, mode,
+    return filter_parts(
+        spark, out_dir, _preds_to_spec(preds), project, count_only,
         combine="or",
     )
 
@@ -576,14 +172,13 @@ def filter_in(
     values: list,
     project: list[str] | None = None,
     count_only: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
     """``WHERE column IN (...)``: dictionary paths match against the
     memoized global-code set of the target values (multi-value
     generalization of the equi-filter's carried offset); zone maps
     prune on the [min, max] envelope of the list."""
-    return _dispatch_filter(
-        spark, out_dir, [(column, ("in", list(values)))], project, count_only, mode
+    return filter_parts(
+        spark, out_dir, [(column, ("in", list(values)))], project, count_only
     )
 
 
@@ -594,7 +189,6 @@ def filter_prefix(
     pattern,
     project: list[str] | None = None,
     count_only: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
     """``WHERE column LIKE 'pattern%'`` (string/binary columns). The
     predicate is evaluated once per dictionary ENTRY (Arrow
@@ -602,8 +196,8 @@ def filter_prefix(
     zone maps prune blocks outside [pattern, next_prefix(pattern)) —
     prefix-truncated bounds stay safe because a truncated min is ≤ the
     true min."""
-    return _dispatch_filter(
-        spark, out_dir, [(column, ("prefix", pattern))], project, count_only, mode
+    return filter_parts(
+        spark, out_dir, [(column, ("prefix", pattern))], project, count_only
     )
 
 
@@ -614,15 +208,14 @@ def filter_contains(
     pattern,
     project: list[str] | None = None,
     count_only: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
     """``WHERE column LIKE '%pattern%'`` — substring search. Dictionary
     paths run Arrow ``match_substring`` once per DISTINCT value (the
     dict-encoding payoff: O(dict) string work, O(rows) code gather);
     plain/fsst blocks materialize and run the same kernel. No zone
     pruning is possible (a substring says nothing about value order)."""
-    return _dispatch_filter(
-        spark, out_dir, [(column, ("contains", pattern))], project, count_only, mode
+    return filter_parts(
+        spark, out_dir, [(column, ("contains", pattern))], project, count_only
     )
 
 
@@ -644,8 +237,6 @@ def filter_agg(
     exact ints); double/float columns use the fixed-point contract at
     ``agg_scale`` (partread.quantized_agg_lane) with single IEEE
     divisions at output — cross-engine bit-identical either way."""
-    from arcade_spark.partread import filter_parts
-
     avt = dict(table_columns(spark, out_dir)).get(agg_col)
     partial = filter_parts(
         spark, out_dir, _preds_to_spec(preds), agg_col=agg_col,
@@ -697,7 +288,6 @@ def filter_sample(
     denominator: int,
     project: list[str] | None = None,
     count_only: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
     """Deterministic hash sampling pushed into the encoded scan: keep
     rows where ``md5_60bit(column) % denominator < numerator`` (e.g.
@@ -708,9 +298,9 @@ def filter_sample(
     sampling, on an entity key (host, source) for leakage-free
     group-level splits. Composable in AND/OR/DNF (e.g. sample ∧ lang
     filter) and negatable (``not_sample`` = the exact complement)."""
-    return _dispatch_filter(
+    return filter_parts(
         spark, out_dir, [(column, ("sample", numerator, denominator))],
-        project, count_only, mode,
+        project, count_only,
     )
 
 
@@ -721,7 +311,6 @@ def filter_like(
     pattern,
     project: list[str] | None = None,
     count_only: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
     """Full SQL ``WHERE column LIKE pattern`` (``%`` and ``_``
     wildcards, no escape character): the pattern translates to one
@@ -729,8 +318,8 @@ def filter_like(
     through bit-packed codes, and zone maps prune on the literal prefix
     before the first wildcard. ``filter_prefix`` / ``filter_contains``
     / ``filter_suffix`` are the specialized fast forms."""
-    return _dispatch_filter(
-        spark, out_dir, [(column, ("like", pattern))], project, count_only, mode
+    return filter_parts(
+        spark, out_dir, [(column, ("like", pattern))], project, count_only
     )
 
 
@@ -741,485 +330,18 @@ def filter_suffix(
     pattern,
     project: list[str] | None = None,
     count_only: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
     """``WHERE column LIKE '%pattern'`` (Arrow ``ends_with`` over
     dictionary entries; no zone pruning)."""
-    return _dispatch_filter(
-        spark, out_dir, [(column, ("suffix", pattern))], project, count_only, mode
+    return filter_parts(
+        spark, out_dir, [(column, ("suffix", pattern))], project, count_only
     )
 
 
-def _encode_bound(v):
-    return v.encode() if isinstance(v, str) else v
-
-
-def _prefix_upper(p: bytes) -> bytes | None:
-    """Smallest byte string greater than EVERY value with prefix ``p``
-    (exclusive upper bound of the prefix range): the rightmost byte
-    < 0xFF incremented, tail dropped. None when p is all 0xFF (the
-    prefix range is unbounded above)."""
-    b = bytearray(p)
-    for i in range(len(b) - 1, -1, -1):
-        if b[i] != 0xFF:
-            return bytes(b[:i]) + bytes([b[i] + 1])
-    return None
-
-
-def _int_literal(v) -> int:
-    """Query literal → the stored int64 lane: bools → 0/1, dates →
-    epoch days, datetimes → epoch micros (UTC when naive), ints pass
-    through."""
-    import datetime as _dt
-
-    if isinstance(v, bool):
-        return int(v)
-    if isinstance(v, _dt.datetime):
-        if v.tzinfo is None:
-            v = v.replace(tzinfo=_dt.timezone.utc)
-        epoch = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
-        return (v - epoch) // _dt.timedelta(microseconds=1)
-    if isinstance(v, _dt.date):
-        return (v - _dt.date(1970, 1, 1)).days
-    return int(v)
-
-
-class _Pred:
-    """Compiled per-column predicate: zone expression, kernel matcher,
-    replay-state factory."""
-
-    def __init__(self, column: str, vtype: str, pred: tuple):
-        from arcade_spark.bits import float_order_key
-
-        self.column = column
-        self.vtype = vtype
-        self.is_str = vtype in ("str", "binary")
-        self.is_float = vtype in ("double", "float")
-        # negated forms wrap the positive predicate: the kernel matches
-        # the inner predicate and complements within VALID rows (SQL:
-        # nulls satisfy neither x = v nor x <> v)
-        _neg_map = {"neq": "eq", "not_in": "in", "not_range": "range",
-                    "not_prefix": "prefix", "not_contains": "contains",
-                    "not_suffix": "suffix", "not_like": "like",
-                    "not_sample": "sample"}
-        self.negated = pred[0] in _neg_map
-        if self.negated:
-            pred = (_neg_map[pred[0]], *pred[1:])
-        self.kind = pred[0]
-        if self.kind == "sample":
-            if not self.is_str:
-                raise ValueError(
-                    f"sample predicates apply to string/binary columns "
-                    f"only; {column!r} is {vtype}"
-                )
-            self.numer, self.denom = int(pred[1]), int(pred[2])
-            if not (0 <= self.numer <= self.denom and self.denom > 0):
-                raise ValueError(
-                    f"need 0 <= numerator <= denominator, got "
-                    f"{self.numer}/{self.denom}"
-                )
-            self.lob = self.hib = None  # hashes carry no order: no zone prune
-            return
-        if self.kind == "like":
-            if not self.is_str:
-                raise ValueError(
-                    f"like predicates apply to string/binary columns "
-                    f"only; {column!r} is {vtype}"
-                )
-            self.pattern = _encode_bound(pred[1])
-            if not self.pattern:
-                raise ValueError("like pattern must be non-empty")
-            # zone envelope from the literal prefix before the first
-            # wildcard: every match lies in [prefix, next_prefix(prefix))
-            lit = _like_literal_prefix(self.pattern)
-            self.lob = lit if lit else None
-            self.hib = _prefix_upper(lit) if lit else None
-            return
-        if self.kind in ("prefix", "contains", "suffix"):
-            if not self.is_str:
-                raise ValueError(
-                    f"{self.kind} predicates apply to string/binary "
-                    f"columns only; {column!r} is {vtype}"
-                )
-            self.pattern = _encode_bound(pred[1])
-            if not self.pattern:
-                raise ValueError(f"{self.kind} pattern must be non-empty")
-            # zone envelope: every value with prefix p lies in
-            # [p, _prefix_upper(p)); contains/suffix admit any value —
-            # no zone pruning (lob/hib None ⇒ keep)
-            if self.kind == "prefix":
-                self.lob, self.hib = self.pattern, _prefix_upper(self.pattern)
-            else:
-                self.lob = self.hib = None
-            return
-        if self.kind == "eq":
-            self.lob = self.hib = _encode_bound(pred[1])
-        elif self.kind == "in":
-            self.in_vals = [_encode_bound(v) for v in pred[1]]
-            if not self.in_vals:
-                raise ValueError("empty IN list")
-            if self.is_str:
-                self.lob, self.hib = min(self.in_vals), max(self.in_vals)
-            else:
-                fv = [float(v) if self.is_float else _int_literal(v) for v in self.in_vals]
-                self.lob, self.hib = min(fv), max(fv)
-        else:
-            self.lob, self.hib = _encode_bound(pred[1]), _encode_bound(pred[2])
-        if not self.is_str:
-            if self.kind == "eq":
-                if self.is_float:
-                    # stored bitcast: equality compares bit patterns,
-                    # zone prune compares order-preserving keys. ±0.0
-                    # are SQL-equal but distinct bit patterns — expand
-                    # a zero literal to both and widen the zone
-                    # envelope across both keys (-1 and 0)
-                    f = float(self.lob)
-                    pats = {int(np.float64(f).view(np.int64))}
-                    if f == 0.0:
-                        pats.add(int(np.float64(-0.0).view(np.int64)))
-                        pats.add(int(np.float64(0.0).view(np.int64)))
-                    self.targets = np.array(sorted(pats), dtype=np.int64)
-                    keys = [
-                        float_order_key(float(np.int64(p).view(np.float64)))
-                        for p in pats
-                    ]
-                    self.zone_lo, self.zone_hi = min(keys), max(keys)
-                else:
-                    self.target_int = _int_literal(self.lob)
-                    self.zone_lo = self.zone_hi = self.target_int
-            elif self.kind == "in":
-                if self.is_float:
-                    pats = {
-                        int(np.float64(float(v)).view(np.int64)) for v in self.in_vals
-                    }
-                    if any(float(v) == 0.0 for v in self.in_vals):
-                        pats.add(int(np.float64(-0.0).view(np.int64)))
-                        pats.add(int(np.float64(0.0).view(np.int64)))
-                    self.targets = np.array(sorted(pats), dtype=np.int64)
-                    keys = [
-                        float_order_key(float(np.int64(p).view(np.float64)))
-                        for p in pats
-                    ]
-                    self.zone_lo, self.zone_hi = min(keys), max(keys)
-                else:
-                    self.targets = np.array(
-                        [_int_literal(v) for v in self.in_vals], dtype=np.int64
-                    )
-                    self.zone_lo, self.zone_hi = int(self.lob), int(self.hib)
-            else:
-                if self.is_float:
-                    self.flo, self.fhi = float(self.lob), float(self.hib)
-                    # a bound of 0.0 admits both ±0.0 bit patterns —
-                    # widen the key envelope across the zero pair
-                    self.zone_lo = (
-                        float_order_key(-0.0)
-                        if self.flo == 0.0
-                        else float_order_key(self.flo)
-                    )
-                    self.zone_hi = (
-                        float_order_key(0.0)
-                        if self.fhi == 0.0
-                        else float_order_key(self.fhi)
-                    )
-                else:
-                    self.ilo, self.ihi = _int_literal(self.lob), _int_literal(self.hib)
-                    self.zone_lo, self.zone_hi = self.ilo, self.ihi
-
-    def target_keys(self) -> list[int]:
-        """Zone-key(s) of the inner eq/IN targets — used by the negated
-        all-match prune (a block whose zone is a single key equal to a
-        target provably matches everywhere → its complement is empty)."""
-        from arcade_spark.bits import float_order_key
-
-        if self.kind == "eq":
-            if self.is_float:
-                return [float_order_key(float(np.int64(p).view(np.float64)))
-                        for p in self.targets]
-            return [self.target_int]
-        if self.kind == "in":
-            if self.is_float:
-                return [float_order_key(float(np.int64(p).view(np.float64)))
-                        for p in self.targets]
-            return [int(t) for t in self.targets]
-        return []
-
-    def zone_keep_expr(self):
-        if self.negated:
-            raise NotImplementedError(
-                "negated predicates are files-mode only (plan mode is "
-                "a debug/cross-check path, README round-4)"
-            )
-        if self.kind in ("contains", "suffix", "sample"):
-            # any value can match regardless of its zone bounds
-            return F.lit(True)
-        if self.is_str and self.lob is None:
-            # LIKE starting with a wildcard: no literal prefix to prune on
-            return F.lit(True)
-        if self.is_str:
-            lo_lit = F.lit(bytearray(self.lob))
-            max_prune = F.col("max_exact") & (lo_lit > F.col("max_bin"))
-            if self.hib is None:  # all-0xFF prefix: unbounded above
-                prune = max_prune
-            else:
-                hi_lit = F.lit(bytearray(self.hib))
-                prune = (hi_lit < F.col("min_bin")) | max_prune
-        else:
-            prune = (F.lit(self.zone_hi) < F.col("min_int")) | (
-                F.lit(self.zone_lo) > F.col("max_int")
-            )
-        return ~F.coalesce(prune, F.lit(False))
-
-    def new_state(self):
-        if self.kind == "eq":
-            return _StrFilterState(self.lob)
-        if self.kind == "in":
-            return _StrInState(self.in_vals)
-        if self.kind == "sample":
-            return _StrHashSampleState(self.numer, self.denom)
-        if self.kind == "like":
-            return _StrLikeState(self.pattern)
-        if self.kind in ("prefix", "contains", "suffix"):
-            return _StrMatchState(self.kind, self.pattern)
-        return _StrRangeState(self.lob, self.hib)
-
-    def int_positions(self, iblock) -> np.ndarray:
-        if self.kind == "eq":
-            if self.is_float:
-                # 1 or 2 bit patterns (±0.0 expansion)
-                m = np.isin(iblock.values, self.targets)
-            else:
-                m = iblock.values == self.target_int
-        elif self.kind == "in":
-            m = np.isin(iblock.values, self.targets)
-        elif self.is_float:
-            v = iblock.values.view(np.float64)
-            m = (v >= self.flo) & (v <= self.fhi)
-        else:
-            m = (iblock.values >= self.ilo) & (iblock.values <= self.ihi)
-        if self.negated:
-            m = ~m
-        pos = np.nonzero(m)[0]
-        if iblock.validity is not None and len(pos):
-            pos = pos[iblock.validity[pos]]
-        return pos
-
-
-def _filter_op(
-    spark: SparkSession,
-    out_dir: str,
-    preds_spec: list[tuple[str, tuple]],
-    project: list[str] | None = None,
-    count_only: bool = False,
-) -> DataFrame:
-    """Shared filter driver over a CONJUNCTION of per-column predicates
-    (("eq", value) / ("range", lo, hi), inclusive bounds; at most one
-    predicate per column).
-
-    The zone-map prune is computed in the DataFrame plan (`zone_keep`),
-    so Catalyst evaluates min/max against parquet row-group stats
-    before any Python runs; pruned dictionary blocks are still replayed
-    (seg column only) but never scanned or materialized — mirroring
-    process.cpp:256-273 + the previndex segment walk (process.cpp:88-123)."""
-    all_cols = dict(table_columns(spark, out_dir))
-    preds: dict[str, _Pred] = {}
-    for column, pred in preds_spec:
-        if column not in all_cols:
-            raise KeyError(f"no such column: {column}")
-        if column in preds:
-            raise ValueError(f"multiple predicates on {column!r} not supported")
-        preds[column] = _Pred(column, all_cols[column], pred)
-    pred_cols = list(preds)
-
-    if count_only:
-        # count-only fast path (runner.cpp:11): no projection chunks
-        # are read at all — only the filter columns' files ship
-        project = []
-    else:
-        project = [
-            c for c in (project or [c for c in all_cols if c not in preds])
-        ]
-    sel_cols = pred_cols + [c for c in project if c not in preds]
-    vtypes = {c: all_cols[c] for c in sel_cols}
-
-    blocks = read_blocks(spark, out_dir, sel_cols)
-    zk_chain = F.lit(True)
-    for p in preds.values():
-        zk_chain = F.when(F.col("column") == p.column, p.zone_keep_expr()).otherwise(
-            zk_chain
-        )
-    blocks = blocks.withColumn("zone_keep", zk_chain)
-    is_pred_col = F.col("column").isin(pred_cols)
-    stateful = (F.col("codec") == "dict_global") | F.col("gdict_seed")
-    # per-(part,block) verdict = AND of every predicate column's zone
-    # verdict (min over booleans == AND)
-    fmeta_keep = F.lit(True)
-    for p in preds.values():
-        fmeta_keep = F.when(F.col("column") == p.column, p.zone_keep_expr()).otherwise(
-            fmeta_keep
-        )
-    if not count_only:
-        fmeta = (
-            read_blocks(spark, out_dir, pred_cols)
-            .filter(F.col("column").isin(pred_cols))
-            .select("part_id", "block_id", fmeta_keep.alias("keep"))
-            .groupBy("part_id", "block_id")
-            .agg(F.min("keep").alias("blk_keep"))
-        )
-        # true I/O skip (predicate columns): pruned chunks whose codec
-        # carries no cross-block dictionary state are DROPPED in the
-        # plan — the predicate is on raw stats columns, so parquet
-        # row-group pruning elides their blob bytes entirely. Stateful
-        # chunks (differential dict segments, local-dict seeds) are
-        # retained for replay (the previndex walk analogue,
-        # process.cpp:88-123). count_only keeps every row so the
-        # zone_skipped metric is observable (FIXTURES.md §3).
-        blocks = blocks.filter((~is_pred_col) | F.col("zone_keep") | stateful)
-        # block-level propagation to PROJECTION columns: a block pruned
-        # by ANY predicate's zone map can produce no matches, so every
-        # other chunk of it is replay-only. The per-block verdict is a
-        # tiny metadata-only scan (no blob/seg bytes read — parquet
-        # column pruning), broadcast-joined onto every chunk row. At
-        # scale this is the difference between shipping all html blobs
-        # of all blocks vs only matched blocks'.
-        blocks = blocks.join(F.broadcast(fmeta), ["part_id", "block_id"], "left")
-        blocks = blocks.withColumn("blk_keep", F.coalesce("blk_keep", F.lit(True)))
-        blocks = blocks.filter((F.col("zone_keep") & F.col("blk_keep")) | stateful)
-    else:
-        # count-only keeps every chunk row (zone_skipped metric) and
-        # needs no cross-column verdict — every predicate chunk ships
-        # anyway, so skip the fmeta scan+join entirely (single scan)
-        blocks = blocks.withColumn("blk_keep", F.col("zone_keep"))
-    # replay-only chunks ship their dict segment but never the code
-    # array: NULL out the blob in the plan so shuffle + Arrow IPC move
-    # segments only (the blob column bytes dominate at scale)
-    blocks = blocks.withColumn(
-        "blob",
-        F.when(F.col("zone_keep") & F.col("blk_keep"), F.col("blob")),
-    )
-
-    n_parts = _num_parts(spark, out_dir)
-    proj_items = [(c, vtypes[c]) for c in project]
-    pred_list = list(preds.values())
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fstates: dict[tuple[int, str], object] = {}
-        gdecs: dict[tuple[int, str], GlobalDictDecoder] = {}
-
-        def handle_block(part_id: int, block_id: int, chunks) -> pd.DataFrame | None:
-            pos = None
-            n_skipped = 0
-            for p in pred_list:
-                fchunk = chunks.get(p.column)
-                if fchunk is None:
-                    # pruned out of the plan entirely (stateless codec
-                    # outside the zone map) → zero matches
-                    pos_c = np.empty(0, dtype=np.int64)
-                    n_skipped += 1
-                else:
-                    fblob, fmeta_, fkeep = fchunk
-                    if p.is_str:
-                        st = fstates.setdefault((part_id, p.column), p.new_state())
-                        if fkeep and fblob is not None:
-                            pos_c = st.match_positions(fblob, fmeta_)
-                        else:
-                            st.replay(fmeta_)
-                            pos_c = np.empty(0, dtype=np.int64)
-                            n_skipped += 1
-                    else:
-                        if fkeep and fblob is not None:
-                            pos_c = p.int_positions(decode_int_block(fblob, fmeta_))
-                        else:
-                            pos_c = np.empty(0, dtype=np.int64)
-                            n_skipped += 1
-                if pos is None:
-                    pos = pos_c
-                elif len(pos) and len(pos_c):
-                    pos = np.intersect1d(pos, pos_c, assume_unique=True)
-                else:
-                    pos = np.empty(0, dtype=np.int64)
-            if pos is None:
-                pos = np.empty(0, dtype=np.int64)
-
-            if count_only:
-                return pd.DataFrame(
-                    {"part_id": [part_id], "block_id": [block_id],
-                     "matches": [len(pos)],
-                     "zone_skipped": [1 if n_skipped else 0]}
-                )
-
-            data = {}
-            for name, vt in proj_items:
-                chunk = chunks.get(name)
-                if chunk is None:
-                    # only the filter column can be absent (pruned,
-                    # stateless) — and then pos is empty: nothing to
-                    # materialize or replay
-                    continue
-                blob, meta, _ = chunk
-                if vt in ("str", "binary"):
-                    gdec = gdecs.setdefault((part_id, name), GlobalDictDecoder())
-                    if len(pos) == 0 or blob is None:
-                        from arcade_spark.core import replay_str_block
-
-                        replay_str_block(meta, gdec)
-                        continue
-                    from arcade_spark.core import decode_str_positions
-
-                    block = decode_str_positions(blob, meta, pos, gdec)
-                    data[name] = block_to_series(block, vt)
-                else:
-                    if len(pos) == 0:
-                        continue
-                    block = decode_int_block(blob, meta)
-                    s = block_to_series(block, vt)
-                    data[name] = s.iloc[pos].reset_index(drop=True)
-            if len(pos) == 0:
-                return None
-            return pd.DataFrame(data)
-
-        # chunks arrive sorted by (part_id, block_id, column): flush each
-        # block as soon as the key advances (a pruned-out filter chunk
-        # never arrives, so completion can't key on column count)
-        cur_key: tuple[int, int] | None = None
-        cur_chunks: dict[str, tuple] = {}
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                key = (int(row.part_id), int(row.block_id))
-                if cur_key is not None and key != cur_key:
-                    out = handle_block(cur_key[0], cur_key[1], cur_chunks)
-                    if out is not None and len(out):
-                        yield out
-                    cur_chunks = {}
-                cur_key = key
-                cur_chunks[row.column] = (
-                    row.blob,
-                    _meta_from_row(row),
-                    bool(row.zone_keep) and bool(row.blk_keep),
-                )
-        if cur_key is not None and cur_chunks:
-            out = handle_block(cur_key[0], cur_key[1], cur_chunks)
-            if out is not None and len(out):
-                yield out
-
-    if count_only:
-        schema = "part_id int, block_id int, matches long, zone_skipped int"
-    else:
-        schema = ", ".join(f"{n} {spark_type_for(v)}" for n, v in proj_items)
-
-    result = (
-        blocks.repartition(max(n_parts, 1), F.col("part_id"))
-        .sortWithinPartitions("part_id", "block_id", "column")
-        .mapInPandas(kernel, schema=schema)
-    )
-    return result
-
-
-def filter_count(
-    spark: SparkSession, out_dir: str, column: str, value, mode: str = "files"
-) -> DataFrame:
+def filter_count(spark: SparkSession, out_dir: str, column: str, value) -> DataFrame:
     """Count-only fast path: one row ``cnt`` (plus blocks_skipped for
     zone-map observability — FIXTURES.md §3)."""
-    per_block = equi_filter(spark, out_dir, column, value, count_only=True, mode=mode)
+    per_block = equi_filter(spark, out_dir, column, value, count_only=True)
     return per_block.agg(
         F.sum("matches").alias("cnt"), F.sum("zone_skipped").alias("blocks_skipped")
     )
@@ -1244,100 +366,6 @@ def column_minmax(spark: SparkSession, out_dir: str, column: str) -> DataFrame:
     from arcade_spark.partread import column_minmax_parts
 
     return column_minmax_parts(spark, out_dir, column)
-
-
-def _int_chunk_counts(blob, meta: dict, is_float: bool):
-    """Per-chunk (values, counts) partial for integer-family group
-    counts. Doubles group by canonicalized bit pattern: -0.0 folds into
-    +0.0 and every NaN payload collapses to the quiet-NaN pattern, so
-    grouping matches SQL value-equality semantics."""
-    iblock = decode_int_block(blob, meta)
-    v = iblock.values
-    if iblock.validity is not None:
-        v = v[iblock.validity]
-    if len(v) == 0:
-        return None
-    if is_float:
-        v = v.copy()
-        f = v.view(np.float64)
-        v[f == 0.0] = 0  # catches both ±0.0 (IEEE equality)
-        v[np.isnan(f)] = np.int64(0x7FF8000000000000)
-    vals, cnts = np.unique(v, return_counts=True)
-    if is_float:
-        vals = vals.view(np.float64)
-    return vals, cnts
-
-
-def _str_chunk_codes(gdec: GlobalDictDecoder, blob, meta: dict):
-    """Per-chunk (codes, validity, resolve) for string group-by kernels:
-    ``codes`` is an int64 per-row code array, ``resolve(used_codes)``
-    maps code ids to value bytes (object array). Dict/RLE paths hand
-    back the stored codes without materializing any strings; plain/fsst
-    blocks factorize the materialized values (dictionaries lost the
-    codec race there, so the strings exist anyway)."""
-    validity_sec, payload = unpack_sections(blob)
-    payload = unpost(payload, meta.get("post"))
-    codec = meta["codec"]
-    n = meta["n_values"]
-    if meta.get("gdict_reset"):
-        gdec.reset()
-    validity = unpack_validity(validity_sec, n)
-
-    if codec in ("dict_global", "dict_local"):
-        if codec == "dict_global":
-            gdec.append(sc._deserialize_values_arrow(meta["seg"]))
-            dictionary = None  # resolve through the running dict
-        else:
-            dictionary = sc._deserialize_values_arrow(meta["seg"])
-            if meta.get("gdict_seed"):
-                gdec.append(dictionary)
-        codes = unpack_uints(payload, meta["code_width"], n).view(np.int64)
-
-        def resolve(used: np.ndarray) -> np.ndarray:
-            if dictionary is None:
-                return gdec.take_block(used).to_object_array()
-            return sc._take_to_block(dictionary, used).to_object_array()
-
-        return codes, validity, resolve
-    if codec == "rle_str":
-        import struct
-
-        dict_sec, codes_sec, lens_sec = unpack_sections(payload)
-        uniques = sc._deserialize_values_arrow(dict_sec)
-        (nruns,) = struct.unpack_from("<I", codes_sec, 0)
-        run_codes = unpack_uints(codes_sec[4:], meta["code_width"], nruns).view(np.int64)
-        run_lens = np.asarray(decode_for_int(lens_sec, {"n_values": nruns}),
-                              dtype=np.int64)
-        codes = np.repeat(run_codes, run_lens)
-
-        def resolve(used: np.ndarray) -> np.ndarray:
-            return sc._take_to_block(uniques, used).to_object_array()
-
-        return codes, validity, resolve
-    # plain / fsst: factorize the materialized values
-    block = sc.decode_plain(payload, meta) if codec == "plain" else sc.decode_fsst(payload, meta)
-    obj = block.to_object_array()
-    obj = np.where(obj == None, b"", obj)  # noqa: E711 (masked by validity)
-    uniq, codes = np.unique(obj, return_inverse=True)
-
-    def resolve(used: np.ndarray) -> np.ndarray:
-        return uniq[used]
-
-    return codes.astype(np.int64), validity, resolve
-
-
-def _str_chunk_counts(gdec: GlobalDictDecoder, blob, meta: dict):
-    """Per-chunk (values, counts) partial for string group counts —
-    decode-free on dict/rle paths: bincount the bit-packed codes and
-    resolve only the few used codes through the (running) dictionary."""
-    codes, validity, resolve = _str_chunk_codes(gdec, blob, meta)
-    if validity is not None:
-        codes = codes[validity]
-    if len(codes) == 0:
-        return None
-    cnt = np.bincount(codes)
-    used = np.nonzero(cnt)[0]
-    return resolve(used), cnt[used]
 
 
 def column_topk(
@@ -1370,9 +398,7 @@ def column_agg(
                             mode=mode)
 
 
-def group_count(
-    spark: SparkSession, out_dir: str, column: str, mode: str = "files"
-) -> DataFrame:
+def group_count(spark: SparkSession, out_dir: str, column: str) -> DataFrame:
     """``SELECT column, count(*) GROUP BY column`` computed on the
     ENCODED representation — no payload materialization on the
     dictionary/RLE paths (the ARCADE thesis applied to aggregation):
@@ -1389,61 +415,11 @@ def group_count(
     count of non-null values per group, like COUNT(col)). Doubles group
     by canonicalized value (-0.0 = 0.0, NaN payloads collapsed) to
     match SQL GROUP BY equality."""
-    if mode == "files":
-        from arcade_spark.partread import group_count_partials
+    from arcade_spark.partread import group_count_partials
 
-        partial, fvt = group_count_partials(spark, out_dir, column)
-        is_str = fvt in ("str", "binary")
-        is_float = fvt in ("double", "float")
-    elif mode == "plan":
-        all_cols = dict(table_columns(spark, out_dir))
-        if column not in all_cols:
-            raise KeyError(f"no such column: {column}")
-        fvt = all_cols[column]
-        is_str = fvt in ("str", "binary")
-        is_float = fvt in ("double", "float")
-        n_parts = _num_parts(spark, out_dir)
-        blocks = read_blocks(spark, out_dir, [column]).filter(F.col("column") == column)
-
-        if not is_str:
-            key_col = "value_dbl" if is_float else "value_int"
-            key_ddl = f"{key_col} double" if is_float else f"{key_col} long"
-
-            def int_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                for pdf in batches:
-                    for row in pdf.itertuples(index=False):
-                        out = _int_chunk_counts(row.blob, _meta_from_row(row), is_float)
-                        if out is None:
-                            continue
-                        vals, cnts = out
-                        yield pd.DataFrame({key_col: vals, "cnt": cnts.astype(np.int64)})
-
-            partial = (
-                blocks.repartition(max(n_parts, 1), F.col("part_id"))
-                .mapInPandas(int_kernel, schema=f"{key_ddl}, cnt long")
-            )
-        else:
-
-            def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                gdecs: dict[int, GlobalDictDecoder] = {}
-                for pdf in batches:
-                    for row in pdf.itertuples(index=False):
-                        gdec = gdecs.setdefault(int(row.part_id), GlobalDictDecoder())
-                        out = _str_chunk_counts(gdec, row.blob, _meta_from_row(row))
-                        if out is None:
-                            continue
-                        vals, cnts = out
-                        yield pd.DataFrame(
-                            {"value_bin": list(vals), "cnt": cnts.astype(np.int64)}
-                        )
-
-            partial = (
-                blocks.repartition(max(n_parts, 1), F.col("part_id"))
-                .sortWithinPartitions("part_id", "block_id")
-                .mapInPandas(kernel, schema="value_bin binary, cnt long")
-            )
-    else:
-        raise ValueError(f"mode must be 'files' or 'plan': {mode!r}")
+    partial, fvt = group_count_partials(spark, out_dir, column)
+    is_str = fvt in ("str", "binary")
+    is_float = fvt in ("double", "float")
 
     if is_str:
         agg = partial.groupBy("value_bin").agg(F.sum("cnt").alias("cnt"))
@@ -1940,14 +916,15 @@ def pivot_table(
     # containing '.' ('1.5', domains, versions) would raise
     # UNRESOLVED_COLUMN under any name lookup (round-8, ADVICE r7).
     # toDF renames positionally with literal names, sidestepping the
-    # parser entirely.
+    # parser entirely. The search starts past the n group-key lanes, so
+    # a pivot value spelled like a lane ('k0') binds its own cell.
     mcols = merged.columns
     safe = merged.toDF(*[f"_c{i}" for i in range(len(mcols))])
     merged = safe
     for v in pivot_values:
         for sp in cspecs:
             src = v if single else f"{v}_{sp['name']}"
-            col = merged[f"_c{mcols.index(src)}"]
+            col = merged[f"_c{mcols.index(src, n)}"]
             if sp["kind"] == "count":
                 col = F.coalesce(col, F.lit(0))
             out_aggs.append(col.alias(f"{v}_{sp['name']}"))
@@ -2943,8 +1920,7 @@ def column_null_count(spark: SparkSession, out_dir: str, column: str) -> DataFra
 
 
 def distinct_values(
-    spark: SparkSession, out_dir: str, column: str | list[str],
-    mode: str = "files",
+    spark: SparkSession, out_dir: str, column: str | list[str]
 ) -> DataFrame:
     """``SELECT DISTINCT col[, col2, ...]`` over rows whose listed
     columns are all NON-NULL (COUNT(DISTINCT) semantics). Single column
@@ -2958,16 +1934,14 @@ def distinct_values(
             column = cols[0]
         else:
             return group_by(spark, out_dir, cols).select(*cols)
-    return group_count(spark, out_dir, column, mode).select(column)
+    return group_count(spark, out_dir, column).select(column)
 
 
-def distinct_count(
-    spark: SparkSession, out_dir: str, column: str, mode: str = "files"
-) -> DataFrame:
+def distinct_count(spark: SparkSession, out_dir: str, column: str) -> DataFrame:
     """``SELECT count(DISTINCT column)`` (nulls excluded, SQL
     semantics) — one row."""
     return (
-        group_count(spark, out_dir, column, mode)
+        group_count(spark, out_dir, column)
         .agg(F.count("*").cast("long").alias("n_distinct"))
     )
 
@@ -2985,7 +1959,6 @@ def filter_semijoin(
     keys_df: DataFrame,
     project: list[str] | None = None,
     count_only: bool = False,
-    mode: str = "files",
 ) -> DataFrame:
     """``WHERE column IN (SELECT key FROM dim)`` — semi-join pushdown
     into the encoded table (the dynamic-partition-pruning pattern):
@@ -3022,7 +1995,7 @@ def filter_semijoin(
         dummy = "" if vt in ("str", "binary") else 0
         empty = filter_in(
             spark, out_dir, column, [dummy],
-            project=project, count_only=count_only, mode=mode,
+            project=project, count_only=count_only,
         )
         # count_only keeps its per-block count rows so SUM(matches)
         # folds to 0, not NULL — matches forced to 0 in case the typed
@@ -3036,7 +2009,7 @@ def filter_semijoin(
         return empty.limit(0)
     return filter_in(
         spark, out_dir, column, keys, project=project,
-        count_only=count_only, mode=mode,
+        count_only=count_only,
     )
 
 
@@ -6001,183 +4974,18 @@ def join_group_by_chain(
     return merged.select(*out_cols, *[sp["name"] for sp in cspecs_a])
 
 
-def _random_access_targets(out_dir: str, row_ids: list[int]):
-    """Global rowid → per-partition local positions via the manifest
-    prefix sums (the ``blocksizes`` index analogue, reader.cpp:113-115).
-    Driver-side metadata math only."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    manifest = pq.read_table(os.path.join(out_dir, "manifest"),
-                             columns=["part_id", "n_rows"])
-    parts = sorted(zip(manifest.column("part_id").to_pylist(),
-                       manifest.column("n_rows").to_pylist()))
-    part_ids = [p for p, _ in parts]
-    offsets = np.concatenate([[0], np.cumsum([n for _, n in parts])])
-
-    targets: dict[int, list[tuple[int, int]]] = {}
-    for rid in row_ids:
-        pi = int(np.searchsorted(offsets, rid, side="right")) - 1
-        if pi < 0 or pi >= len(part_ids) or rid >= offsets[pi + 1]:
-            raise IndexError(f"row id {rid} out of range")
-        targets.setdefault(part_ids[pi], []).append((rid - int(offsets[pi]), rid))
-    return targets
-
-
-_RA_PRECISE_MAX = 32  # total id count above which the plan predicate
-# switches from per-position OR terms to one [min,max] envelope per part
-
-
-def _random_access_blocks(
-    spark: SparkSession, out_dir: str, col_names: list[str],
-    targets: dict[int, list[tuple[int, int]]],
-) -> DataFrame:
-    """Block-range pruning for point lookups: only chunks of TOUCHED
-    blocks ship their blob; stateful chunks (differential dict segments,
-    local-dict seeds) before the last touched position of each partition
-    ship seg-only (NULL blob) for dictionary replay; everything else is
-    dropped in the plan — the predicates are on raw stats columns
-    (row_start, n_values, codec), so parquet row-group pruning elides
-    the dropped chunks' bytes. A 6-row lookup reads ~6 blocks' blobs,
-    not whole partitions."""
-    touched = sorted(targets)
-    blocks = read_blocks(spark, out_dir, col_names).filter(
-        F.col("part_id").isin(touched) if touched else F.lit(False)
-    )
-    if targets:
-        # coarse pushable bound first (simple compare → parquet
-        # row-group pruning): nothing after the globally last touched
-        # position is ever needed. The precise OR-tree below contains
-        # arithmetic (row_start + n_values) that cannot be pushed.
-        global_max = max(lp for lps in targets.values() for lp, _ in lps)
-        blocks = blocks.filter(F.col("row_start") <= F.lit(int(global_max)))
-    # the TOTAL id count decides the plan shape: a per-position OR tree
-    # blows up Catalyst analysis + whole-stage codegen once it reaches
-    # a few hundred terms (measured: a 500-term tree turned a 2 s
-    # lookup into minutes of planning). Point lookups (few ids) get the
-    # precise predicate; bulk lookups get one [min, max] envelope per
-    # part — the kernel always does the exact per-block selection, so
-    # the envelope only affects which blocks ship, never the result.
-    total_ids = sum(len({lp for lp, _ in lps}) for lps in targets.values())
-    precise = total_ids <= _RA_PRECISE_MAX
-    tgt = F.lit(False)
-    state_before = F.lit(False)
-    for p, lps in targets.items():
-        uniq_lps = sorted({lp for lp, _ in lps})
-        if precise:
-            per = None
-            for lp in uniq_lps:
-                c = (F.col("row_start") <= F.lit(int(lp))) & (
-                    F.col("row_start") + F.col("n_values") > F.lit(int(lp))
-                )
-                per = c if per is None else per | c
-        else:
-            per = (F.col("row_start") <= F.lit(int(uniq_lps[-1]))) & (
-                F.col("row_start") + F.col("n_values") > F.lit(int(uniq_lps[0]))
-            )
-        tgt = tgt | ((F.col("part_id") == p) & per)
-        last = max(lp for lp, _ in lps)
-        state_before = state_before | (
-            (F.col("part_id") == p) & (F.col("row_start") <= F.lit(int(last)))
-        )
-    stateful = (F.col("codec") == "dict_global") | F.col("gdict_seed")
-    blocks = blocks.filter(tgt | (stateful & state_before))
-    blocks = blocks.withColumn("is_target", tgt)
-    return blocks.withColumn("blob", F.when(F.col("is_target"), F.col("blob")))
-
-
 def random_access(
     spark: SparkSession,
     out_dir: str,
     row_ids: list[int],
     project: list[str] | None = None,
-    mode: str = "files",
 ) -> DataFrame:
     """Multi-row lookup by global rowid (canonical order: part_id asc,
     block order within part). Metadata math on the driver (manifest +
     chunk headers are metadata, not data), positional decode on
-    executors for only the touched BLOCKS (reader.cpp:69-143). Files
-    mode launches tasks ONLY for touched partitions and fetches exactly
-    the touched blocks' row groups."""
-    if mode == "files":
-        from arcade_spark.partread import random_access_parts
+    executors for only the touched BLOCKS (reader.cpp:69-143). Tasks
+    launch ONLY for touched partitions and fetch exactly the touched
+    blocks' row groups."""
+    from arcade_spark.partread import random_access_parts
 
-        return random_access_parts(spark, out_dir, row_ids, project)
-    if mode != "plan":
-        raise ValueError(f"mode must be 'files' or 'plan': {mode!r}")
-    all_cols = table_columns(spark, out_dir)
-    if project is not None:
-        all_cols = [(n, v) for n, v in all_cols if n in project]
-
-    targets = _random_access_targets(out_dir, row_ids)
-    touched = sorted(targets)
-    blocks = _random_access_blocks(spark, out_dir, [n for n, _ in all_cols], targets)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gdecs: dict[tuple[int, str], GlobalDictDecoder] = {}
-
-        def handle(part_id: int, block_id: int, chunks) -> pd.DataFrame | None:
-            from arcade_spark.core import decode_str_positions, replay_str_block
-
-            if not chunks["__is_target"]:
-                # replay-only block: stateful str chunks only (partial
-                # column set by construction)
-                for name, vt in all_cols:
-                    ch = chunks.get(name)
-                    if ch is not None and vt in ("str", "binary"):
-                        gdec = gdecs.setdefault((part_id, name), GlobalDictDecoder())
-                        replay_str_block(ch[1], gdec)
-                return None
-            row_start = chunks["__row_start"]
-            n_vals = next(
-                ch[1]["n_values"] for k, ch in chunks.items() if not k.startswith("__")
-            )
-            local = targets.get(part_id, [])
-            pos_rid = [
-                (lp - row_start, rid)
-                for lp, rid in local
-                if row_start <= lp < row_start + n_vals
-            ]
-            pos = np.array([p for p, _ in pos_rid], dtype=np.int64)
-            data = {"row_id": pd.Series([r for _, r in pos_rid], dtype="int64")}
-            for name, vt in all_cols:
-                blob, meta = chunks[name][:2]
-                if vt in ("str", "binary"):
-                    gdec = gdecs.setdefault((part_id, name), GlobalDictDecoder())
-                    order = np.argsort(pos, kind="stable")
-                    inv = np.empty(len(order), dtype=np.int64)
-                    inv[order] = np.arange(len(order))
-                    block = decode_str_positions(blob, meta, pos[order], gdec)
-                    s = block_to_series(block, vt)
-                    data[name] = s.iloc[inv].reset_index(drop=True)
-                else:
-                    block = decode_int_block(blob, meta)
-                    data[name] = block_to_series(block, vt).iloc[pos].reset_index(drop=True)
-            return pd.DataFrame(data)
-
-        cur_key: tuple[int, int] | None = None
-        cur_chunks: dict[str, tuple] = {}
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                key = (int(row.part_id), int(row.block_id))
-                if cur_key is not None and key != cur_key:
-                    out = handle(cur_key[0], cur_key[1], cur_chunks)
-                    if out is not None and len(out):
-                        yield out
-                    cur_chunks = {}
-                cur_key = key
-                cur_chunks[row.column] = (row.blob, _meta_from_row(row))
-                cur_chunks["__row_start"] = int(row.row_start)
-                cur_chunks["__is_target"] = bool(row.is_target)
-        if cur_key is not None and cur_chunks:
-            out = handle(cur_key[0], cur_key[1], cur_chunks)
-            if out is not None and len(out):
-                yield out
-
-    schema = "row_id long, " + ", ".join(f"{n} {spark_type_for(v)}" for n, v in all_cols)
-    return (
-        blocks.repartition(max(len(touched), 1), F.col("part_id"))
-        .sortWithinPartitions("part_id", "block_id", "column")
-        .mapInPandas(kernel, schema=schema)
-    )
+    return random_access_parts(spark, out_dir, row_ids, project)

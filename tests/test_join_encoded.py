@@ -454,3 +454,24 @@ def test_semi_and_outer_broadcast_and_match(spark, two_tables):
     key = lambda r: tuple((v is None, str(v)) for v in r)
     assert sorted((tuple(r) for r in full.collect()), key=key) == \
         sorted((tuple(r) for r in full_off.collect()), key=key)
+
+
+def test_materialize_rejects_colliding_carry(spark, tmp_path):
+    """A carried lane named like a projected column would duplicate an
+    output field; refuse it before any Spark job runs."""
+    import arcade_spark.partread as pr
+
+    src = spark.createDataFrame(
+        [(f"u{i}", i) for i in range(8)], "url string, pos long"
+    )
+    out = str(tmp_path / "enc")
+    encode_job(spark, src, out, num_parts=1, block_rows=128, order_col="url")
+    rids = spark.range(4).selectExpr("id AS rid", "id AS pos")
+    sc = spark.sparkContext
+    sc.setJobGroup("carry-clash", "carry collision check")
+    try:
+        with pytest.raises(ValueError, match="pos"):
+            pr.materialize_rowids_parts(spark, out, rids, ["pos"], carry=["pos"])
+        assert sc.statusTracker().getJobIdsForGroup("carry-clash") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

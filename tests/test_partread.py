@@ -1,5 +1,6 @@
-"""Round-3 files-mode read path (partread.py): files-vs-plan mode
-equivalence on every operator, disjunctive (OR) filter algebra,
+"""Round-3 files-mode read path (partread.py): every operator against
+the fixture's pandas frame (the ``test_modes_agree_*`` names predate
+the removal of the plan-mode twin), disjunctive (OR) filter algebra,
 ±0.0 float-equality semantics (ADVICE r2), null-tolerant / string
 column_minmax, and the truncated-buffer guard in bits.unpack_uints."""
 
@@ -45,46 +46,64 @@ def table(spark, tmp_path_factory):
     return out, pdf
 
 
+def _by_url(df: pd.DataFrame, cols: list[str]) -> pd.DataFrame:
+    return df[cols].sort_values("url").reset_index(drop=True)
+
+
 def test_modes_agree_filter(spark, table):
     out, pdf = table
-    for mk in ("files", "plan"):
-        got = equi_filter(spark, out, "lang", "de", project=["url", "x"], mode=mk)
-        want = pdf.loc[pdf["lang"] == "de"]
-        g = got.toPandas().sort_values("url").reset_index(drop=True)
-        w = want[["url", "x"]].sort_values("url").reset_index(drop=True)
-        pd.testing.assert_frame_equal(g, w)
+    got = equi_filter(spark, out, "lang", "de", project=["url", "x"]).toPandas()
+    want = pdf.loc[pdf["lang"] == "de"]
+    pd.testing.assert_frame_equal(
+        _by_url(got, ["url", "x"]), _by_url(want, ["url", "x"])
+    )
 
 
 def test_modes_agree_count_only(spark, table):
     out, pdf = table
-    a = filter_count(spark, out, "lang", "el", mode="files").collect()[0]
-    b = filter_count(spark, out, "lang", "el", mode="plan").collect()[0]
-    assert a["cnt"] == b["cnt"] == int((pdf["lang"] == "el").sum())
+    got = filter_count(spark, out, "lang", "el").collect()[0]
+    assert got["cnt"] == int((pdf["lang"] == "el").sum())
 
 
 def test_modes_agree_random_access(spark, table):
+    """Global row ids follow (part_id, block_id, pos) order: the lookup
+    must return the scan's rows at those ids, each equal to its source
+    row (urls are unique)."""
+    from arcade_spark.decode import scan
+
     out, pdf = table
     ids = [0, 7, 300, 301, 1199]
-    a = random_access(spark, out, ids, mode="files").toPandas().sort_values("row_id")
-    b = random_access(spark, out, ids, mode="plan").toPandas().sort_values("row_id")
-    pd.testing.assert_frame_equal(a.reset_index(drop=True), b.reset_index(drop=True))
+    got = random_access(spark, out, ids).toPandas().sort_values("row_id")
+    assert got["row_id"].tolist() == ids
+    ordered = (
+        scan(spark, out, emit_meta=True).toPandas()
+        .sort_values(["part_id", "block_id", "pos"]).reset_index(drop=True)
+    )
+    cols = ["url", "lang", "x", "v"]
+    pd.testing.assert_frame_equal(
+        got[cols].reset_index(drop=True),
+        ordered.loc[ids, cols].reset_index(drop=True),
+    )
+    src = pdf.set_index("url")
+    for r in got.itertuples(index=False):
+        want = src.loc[r.url]
+        assert (r.lang, r.x, r.v) == (want["lang"], want["x"], want["v"])
+        assert np.signbit(r.v) == np.signbit(want["v"])  # ±0.0 kept apart
 
 
 def test_modes_agree_scan(spark, table):
     from arcade_spark.decode import scan
 
     out, pdf = table
-    a = scan(spark, out, mode="files").toPandas().sort_values("url").reset_index(drop=True)
-    b = scan(spark, out, mode="plan").toPandas().sort_values("url").reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
-    assert len(a) == len(pdf)
+    got = scan(spark, out).toPandas()
+    cols = list(pdf.columns)
+    pd.testing.assert_frame_equal(_by_url(got, cols), _by_url(pdf, cols))
 
 
 def test_modes_agree_group_count(spark, table):
     out, pdf = table
-    a = {r["lang"]: r["cnt"] for r in group_count(spark, out, "lang", mode="files").collect()}
-    b = {r["lang"]: r["cnt"] for r in group_count(spark, out, "lang", mode="plan").collect()}
-    assert a == b == pdf.groupby("lang").size().to_dict()
+    got = {r["lang"]: r["cnt"] for r in group_count(spark, out, "lang").collect()}
+    assert got == pdf.groupby("lang").size().to_dict()
 
 
 def test_filter_or_cross_column(spark, table):
@@ -280,7 +299,7 @@ def test_predicate_column_in_projection(spark, table):
 def test_files_mode_on_reset_heavy_corpus(spark, tmp_path_factory):
     """Blocks alternating low/high cardinality force dict resets and
     local-dict seeds mid-partition; files-mode filter and scan must
-    replay the same dictionary lineage as plan mode."""
+    replay the dictionary lineage back to the source values."""
     import numpy as np
 
     from arcade_spark.decode import scan
@@ -307,14 +326,14 @@ def test_files_mode_on_reset_heavy_corpus(spark, tmp_path_factory):
               spark.read.parquet(f"{out}/blocks").filter("column='tag'")
               .select("codec").distinct().collect()}
     assert len(codecs) >= 2, codecs
-    a = scan(spark, out, mode="files").toPandas().sort_values("url").reset_index(drop=True)
-    b = scan(spark, out, mode="plan").toPandas().sort_values("url").reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
-    for mk in ("files", "plan"):
-        got = equi_filter(spark, out, "tag", "rep3", project=["url"], mode=mk)
-        assert sorted(r["url"] for r in got.collect()) == sorted(
-            pdf.loc[pdf["tag"] == "rep3", "url"]
-        )
+    got = scan(spark, out).toPandas()
+    pd.testing.assert_frame_equal(
+        _by_url(got, ["url", "tag"]), _by_url(pdf, ["url", "tag"])
+    )
+    got = equi_filter(spark, out, "tag", "rep3", project=["url"])
+    assert sorted(r["url"] for r in got.collect()) == sorted(
+        pdf.loc[pdf["tag"] == "rep3", "url"]
+    )
 
 
 def test_random_access_duplicate_ids_files_mode(spark, table):

@@ -162,3 +162,26 @@ def test_pivot_colliding_output_names(spark, pv_table):
             [("x", "count", None), ("news_x", "sum", "qty")],
             pivot_values=["news", "news_news"],
         )
+
+
+def test_pivot_value_named_like_key_lane(spark, tmp_path):
+    """A pivot value spelled like an internal group-key lane ('k0')
+    must bind its own cell, not the group key, which also sits under
+    the name k0 in the pivot output."""
+    rng = np.random.default_rng(11)
+    n = 200
+    df = pd.DataFrame({
+        "url": [f"u{i:04d}" for i in range(n)],
+        "lang": np.array(["en", "de", "fr"])[rng.integers(0, 3, n)],
+        "tag": np.array(["k0", "k1", "x"])[rng.integers(0, 3, n)],
+    })
+    out = str(tmp_path / "enc")
+    encode_job(spark, spark.createDataFrame(df), out,
+               num_parts=2, block_rows=64, order_col="url")
+    got = pivot_table(spark, out, ["lang"], "tag", [("cnt", "count", None)])
+    assert list(got.columns) == ["lang", "k0_cnt", "k1_cnt", "x_cnt"]
+    rows = _rows(got, ["lang"])
+    exp = pd.pivot_table(df, index="lang", columns="tag", values="url",
+                         aggfunc="count", fill_value=0).sort_index()
+    assert rows == [(lang, *map(int, r)) for lang, r in
+                    zip(exp.index, exp.to_numpy())]

@@ -11,9 +11,8 @@ import pandas as pd
 import pytest
 
 from arcade_spark.encode import encode_job
+from arcade_spark.predicates import _like_to_regex, _prefix_upper
 from arcade_spark.readops import (
-    _like_to_regex,
-    _prefix_upper,
     filter_contains,
     filter_dnf,
     filter_like,
@@ -271,12 +270,14 @@ def test_empty_pattern_rejected(spark, match_table):
 
 
 def test_plan_mode_agrees(spark, match_table):
+    """The three match forms over dict (lang) and plain/fsst (url)
+    chunks against pandas; null langs never match."""
     out, pdf = match_table
-    for fn, col, pat in [
-        (filter_prefix, "lang", "en"),
-        (filter_contains, "url", "h2.example"),
-        (filter_suffix, "lang", "v"),
+    for fn, col, pat, want in [
+        (filter_prefix, "lang", "en", _langs(pdf).str.startswith("en")),
+        (filter_contains, "url", "h2.example",
+         pdf["url"].str.contains("h2.example", regex=False)),
+        (filter_suffix, "lang", "v", _langs(pdf).str.endswith("v")),
     ]:
-        a = fn(spark, out, col, pat, project=["url"]).toPandas()
-        b = fn(spark, out, col, pat, project=["url"], mode="plan").toPandas()
-        assert sorted(a["url"]) == sorted(b["url"])
+        got = fn(spark, out, col, pat, project=["url"]).toPandas()
+        assert sorted(got["url"]) == sorted(pdf.loc[want, "url"])
