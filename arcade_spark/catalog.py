@@ -44,9 +44,9 @@ class EncodedTable:
     # -- metadata ----------------------------------------------------
     @property
     def columns(self) -> list[tuple[str, str]]:
-        from arcade_spark.decode import table_columns
+        from arcade_spark.partread import load_manifest
 
-        return table_columns(self.spark, self.out_dir)
+        return load_manifest(self.out_dir)[0]
 
     def manifest(self) -> DataFrame:
         return self.spark.read.parquet(f"{self.out_dir}/manifest")

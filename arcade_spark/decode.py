@@ -1,4 +1,4 @@
-"""Table metadata and the full scan (ArcadeReader::scan —
+"""The blocks table and the full scan (ArcadeReader::scan —
 reader.cpp:146-195), reconstructing the original typed DataFrame from
 the encoded table, bit-identical to the source. The per-partition
 decode itself lives in ``partread.scan_parts``.
@@ -52,50 +52,6 @@ def read_blocks(spark: SparkSession, out_dir: str, columns: list[str] | None = N
     if columns is not None:
         df = df.filter(F.col("column").isin(columns))
     return df
-
-
-_manifest_meta_cache: dict[str, tuple[list[tuple[str, str]], int]] = {}
-
-
-def _manifest_meta(spark: SparkSession, out_dir: str) -> tuple[list[tuple[str, str]], int]:
-    """(columns, n_parts) in ONE tiny manifest job, cached per out_dir
-    for the session (the manifest is immutable once written)."""
-    import json
-
-    cached = _manifest_meta_cache.get(out_dir)
-    if cached is not None:
-        return cached
-    mdf = spark.read.parquet(f"{out_dir}/manifest")
-    if "format_rev" not in mdf.columns:
-        from arcade_spark.manifest import FORMAT_REV
-
-        raise ValueError(
-            f"{out_dir}: no format_rev in manifest (written before rev 6); "
-            f"this reader is FORMAT_REV {FORMAT_REV} — re-encode the table"
-        )
-    rows = mdf.select("columns", "format_rev").collect()
-    from arcade_spark.manifest import FORMAT_REV
-
-    bad = {r["format_rev"] for r in rows} - {FORMAT_REV}
-    if bad:
-        raise ValueError(
-            f"{out_dir}: manifest format_rev {sorted(bad)} != reader "
-            f"FORMAT_REV {FORMAT_REV} — re-encode the table"
-        )
-    cols = [tuple(c) for c in json.loads(rows[0]["columns"])]
-    meta = (cols, len(rows))
-    _manifest_meta_cache[out_dir] = meta
-    return meta
-
-
-def num_parts(spark: SparkSession, out_dir: str) -> int:
-    return _manifest_meta(spark, out_dir)[1]
-
-
-def table_columns(spark: SparkSession, out_dir: str) -> list[tuple[str, str]]:
-    """(name, vtype) in encode order, from the manifest (authoritative —
-    per-column block files make blocks-table row order arbitrary)."""
-    return _manifest_meta(spark, out_dir)[0]
 
 
 def scan(

@@ -110,10 +110,16 @@ def quantized_agg_lane(
 
 def load_manifest(out_dir: str) -> tuple[list[tuple[str, str]], list[tuple[int, int]]]:
     """((name, vtype) list, [(part_id, n_rows)] sorted) from the manifest
-    directory — driver-side pyarrow, no Spark job. Validates FORMAT_REV
-    exactly like decode._manifest_meta."""
-    mdir = os.path.join(out_dir, "manifest")
-    t = pq.read_table(mdir, columns=["part_id", "n_rows", "columns", "format_rev"])
+    directory — driver-side pyarrow, no Spark job — the one manifest
+    reader of the read side. Raises ValueError unless every part was
+    written at this reader's FORMAT_REV."""
+    dset = pq.ParquetDataset(os.path.join(out_dir, "manifest"))
+    if "format_rev" not in dset.schema.names:
+        raise ValueError(
+            f"{out_dir}: no format_rev in manifest (written before rev 6); "
+            f"this reader is FORMAT_REV {FORMAT_REV} — re-encode the table"
+        )
+    t = dset.read(columns=["part_id", "n_rows", "columns", "format_rev"])
     revs = set(t.column("format_rev").to_pylist())
     bad = revs - {FORMAT_REV}
     if bad or not revs:

@@ -23,33 +23,38 @@ from __future__ import annotations
 
 import os
 
-from collections.abc import Iterator
+from collections import defaultdict
+from collections.abc import Callable, Iterator
+from itertools import groupby
+from typing import NamedTuple
 
 import numpy as np
+import pyarrow as pa
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from arcade_spark.decode import table_columns
-from arcade_spark.partread import filter_parts
+from arcade_spark.partread import filter_parts, load_manifest
 from arcade_spark.schema import spark_type_for
 
 
-# key-stream caches persisted by orderby_export / column_rank_values,
-# released by release_key_caches(). Each new sort/rank call releases the
-# previous entries first, so a long-lived session holds at most ONE
-# persisted key stream at a time (interleave two sorts and the earlier
-# one recomputes — correctness is unaffected, persist is a pure hint).
+# key-stream caches that a returned lazy result still reads, released
+# by release_key_caches(). Each new call of a registering op releases
+# the previous entries first, so a long-lived session holds at most ONE
+# op's caches at a time (interleave two sorts and the earlier one
+# recomputes — correctness is unaffected, persist is a pure hint).
 _KEY_CACHES: list[DataFrame] = []
 
 
 def release_key_caches() -> None:
-    """Unpersist every registered key-stream cache. Called automatically
-    at the start of each orderby_export / column_rank_values /
-    join_encoded call and by the query-job CLI after its action; call it
-    yourself after consuming a sort/rank/join result in a long-lived
-    session. (Round-8: one op may register more than one handle — e.g.
-    a hot-key split's input cache plus its sliced stream — so this
-    releases a short list, still bounded per query.)"""
+    """Unpersist every registered key-stream cache. The ops that register
+    caches — orderby_export, column_rank_values, group_rank_values,
+    join_encoded, filter_group_by_sets, pivot_table, and sessionize /
+    rolling_agg / window_shift / join_asof when a hot key splits
+    (``_keyed_window``: the key stream and the slice stream, so one op
+    may register two) — call it at their start; the query-job CLI calls
+    it after its action. Call it yourself after consuming such a result
+    in a long-lived session."""
     while _KEY_CACHES:
         df = _KEY_CACHES.pop()
         try:
@@ -237,7 +242,7 @@ def filter_agg(
     exact ints); double/float columns use the fixed-point contract at
     ``agg_scale`` (partread.quantized_agg_lane) with single IEEE
     divisions at output — cross-engine bit-identical either way."""
-    avt = dict(table_columns(spark, out_dir)).get(agg_col)
+    avt = dict(load_manifest(out_dir)[0]).get(agg_col)
     partial = filter_parts(
         spark, out_dir, _preds_to_spec(preds), agg_col=agg_col,
         agg_scale=agg_scale,
@@ -466,7 +471,7 @@ def group_sum(
     partread.group_sum_partials."""
     from arcade_spark.partread import group_sum_partials
 
-    avt = dict(table_columns(spark, out_dir)).get(agg_col)
+    avt = dict(load_manifest(out_dir)[0]).get(agg_col)
     partial, gvt = group_sum_partials(
         spark, out_dir, group_col, agg_col, agg_scale=agg_scale
     )
@@ -536,7 +541,7 @@ def group_by(
     quantizer). See partread.group_by_partials."""
     from arcade_spark.partread import group_by_partials
 
-    agg_vt = dict(table_columns(spark, out_dir)).get(agg_col) if agg_col else None
+    agg_vt = dict(load_manifest(out_dir)[0]).get(agg_col) if agg_col else None
     partial, vts = group_by_partials(
         spark, out_dir, group_cols, agg_col, agg_scale=agg_scale
     )
@@ -600,7 +605,7 @@ def filter_group_by(
     See partread.filter_group_by_partials."""
     from arcade_spark.partread import filter_group_by_partials
 
-    agg_vt = dict(table_columns(spark, out_dir)).get(agg_col) if agg_col else None
+    agg_vt = dict(load_manifest(out_dir)[0]).get(agg_col) if agg_col else None
     partial, vts = filter_group_by_partials(
         spark, out_dir, _preds_to_spec(preds), group_cols, agg_col,
         agg_scale=agg_scale,
@@ -945,7 +950,6 @@ def _prefix56_array(arr: "pa.Array") -> tuple[np.ndarray, np.ndarray]:
     """Vectorized _prefix56 over an Arrow binary array → (keys int64,
     valid bool). Seven gathers over the value buffer, no per-row
     Python."""
-    import pyarrow as pa
     from arcade_spark.decode import _binary_views
 
     arr = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
@@ -1014,7 +1018,6 @@ def _zone_splits(
     first column has fewer distinct candidates than buckets (20 langs,
     1000 buckets), the second component sub-splits hot first values so
     a hot value never degenerates to one task's sort."""
-    import pyarrow as pa
     from arcade_spark.partread import _ColFile, _assign_df
 
     i64_min = np.iinfo(np.int64).min
@@ -1199,8 +1202,6 @@ def _bucketize_stream(
     (``second_mode``: None | 'col' (k1) | 'rid'), first-lane nulls to
     ``null_bucket``, second-lane nulls to ``null1_sentinel`` (±inf per
     the caller's null-ordering contract)."""
-    import pyarrow as pa
-
     first_only = len(splits) == 0 or (splits.first_only
                                       and second_mode != "rid")
     second_str = second_mode == "col" and kvts[1] in ("str", "binary")
@@ -1291,7 +1292,6 @@ def column_rank_values(
 
     Returns DF (pos long, v <column's logical type>) — one row per
     requested rank."""
-    import pyarrow as pa
     from arcade_spark.partread import key_rowid_parts, load_manifest
 
     if (ranks is None) == (quantiles is None):
@@ -1435,7 +1435,6 @@ def group_rank_values(
     Null contract: rows with a null value OR any null group column are
     dropped (SQL aggregate + group-by semantics). Returns DF
     (group_cols..., pos long, v <column type>)."""
-    import pyarrow as pa
     from arcade_spark.partread import key_rowid_parts, load_manifest
 
     if (ranks is None) == (quantiles is None):
@@ -1643,7 +1642,6 @@ def orderby_export(
     Double/float order columns sort via their order-preserving int64
     keys (bits.float_order_keys — NaN above +inf, -0.0 just before
     0.0)."""
-    import pyarrow as pa
     from arcade_spark.partread import (
         _ColFile,
         _assign_df,
@@ -1989,7 +1987,7 @@ def filter_semijoin(
     if not keys:
         # empty key set: nothing matches; run the filter with a typed
         # dummy key and drop every row, keeping the output schema
-        vt = dict(table_columns(spark, out_dir)).get(column)
+        vt = dict(load_manifest(out_dir)[0]).get(column)
         if vt is None:
             raise KeyError(f"no such column: {column}")
         dummy = "" if vt in ("str", "binary") else 0
@@ -2021,8 +2019,9 @@ def filter_semijoin(
 _BCAST_MAX_KEY_ROWS = 2_000_000
 
 # per-task row bound for the per-key window operators (sessionize /
-# rolling_agg / join_asof): a key whose row count exceeds this pre-splits into
-# time-range slices so no single task absorbs its whole timeline.
+# rolling_agg / window_shift / join_asof, through _keyed_window): a key
+# whose row count exceeds this pre-splits into time-range slices so no
+# single task absorbs its whole timeline.
 # 4M narrow lane rows ≈ 100-160 MB of lexsort input — comfortable for
 # one executor task; at 10^12 rows the stats pass that finds hot keys
 # is one map-side-combined O(distinct keys) aggregation.
@@ -2267,13 +2266,9 @@ def _require_int64_lane(vt: str, col: str, what: str) -> None:
         )
 
 
-def _lane_vtypes(
-    spark: SparkSession, out_dir: str, cols: list[str]
-) -> list[str]:
+def _lane_vtypes(out_dir: str, cols: list[str]) -> list[str]:
     """Manifest vtypes for ``cols`` (in order), KeyError on a miss."""
-    from arcade_spark.decode import table_columns
-
-    all_cols = dict(table_columns(spark, out_dir))
+    all_cols = dict(load_manifest(out_dir)[0])
     out = []
     for c in cols:
         if c not in all_cols:
@@ -2331,21 +2326,17 @@ def join_asof(
     never match; ``how="left"`` keeps unmatched and null-key left rows
     with null right columns, ``"inner"`` drops them.
 
-    Hot-key escape hatch (PLANS.md §9): when a by-key's UNION stream
-    exceeds ``hot_key_threshold`` rows it pre-splits into time-range
-    slices, and each slice receives CARRY rows — one virtual right row
-    per slice and direction (backward: the latest right of all earlier
-    slices; forward: the earliest right of all later slices; nearest:
-    both) — so every slice's merge is complete in its own task and the
-    output is identical to the unsplit path. Carries duplicate real
-    right rows and the kernel emits left rows only, so nothing double-
-    counts; the stats pass is skipped when the two manifests' row
-    total cannot exceed the threshold.
+    By-keys whose union stream exceeds ``hot_key_threshold`` rows split
+    by time range (``_keyed_window``; the bound is the two manifests'
+    row total). Stitch: carries — one virtual right row per slice and
+    direction (backward: the latest right of all earlier slices;
+    forward: the earliest right of all later slices; nearest: both);
+    they duplicate real right rows and the kernel emits left rows only,
+    so nothing double-counts.
 
     Output: by columns (left values), ``on`` (left), ``{on_b}_b``
     (matched right value, null if unmatched), project_a..., project_b...
     """
-    import pyarrow as pa
     from arcade_spark.partread import key_rowid_parts, materialize_rowids_parts
 
     if how not in ("inner", "left"):
@@ -2372,9 +2363,9 @@ def join_asof(
     # validate lane types from the manifests BEFORE building either
     # stream, so a bad on-column reports its own error (not a missing-
     # column KeyError from the other side's key extraction)
-    vts_a = _lane_vtypes(spark, out_a, by_cols + [on])
+    vts_a = _lane_vtypes(out_a, by_cols + [on])
     _require_int64_lane(vts_a[m], on, "as-of on")
-    vts_b = _lane_vtypes(spark, out_b, by_cols + [on_b])
+    vts_b = _lane_vtypes(out_b, by_cols + [on_b])
     _require_int64_lane(vts_b[m], on_b, "as-of on")
     for i, (va, vb) in enumerate(zip(vts_a, vts_b)):
         if (va in ("str", "binary")) != (vb in ("str", "binary")):
@@ -2414,182 +2405,26 @@ def join_asof(
         *knames, F.col(f"k{m}").alias("t"),
         F.lit(side_right).cast("int").alias("side"), "rid",
     )
-    u_base = lv.unionByName(rv)
-    sliced = None
-    _rb = (
-        _manifest_total_rows(out_a) + _manifest_total_rows(out_b)
-        if hot_key_threshold is not None else 0
-    )
-    if hot_key_threshold is not None and _rb > hot_key_threshold:
-        sliced, _n_hot = _split_hot_keys(
-            spark, u_base, knames, lane_is_bin, "t",
-            overlap=0, threshold=hot_key_threshold, row_bound=_rb,
-        )
-    with_slices = sliced is not None
-    if with_slices:
-        # the sliced stream feeds BOTH the per-slice carry aggregation
-        # and the final merge — persist so the union key-stream kernel
-        # and the hot-key join/explode run once, not three times
-        from pyspark import StorageLevel
-
-        release_key_caches()
-        sliced = sliced.persist(StorageLevel.MEMORY_AND_DISK)
-        _register_key_cache(sliced)
-        # CARRY rows give each slice the out-of-slice context its merge
-        # needs — one virtual right row per (hot key, slice, direction):
-        # backward = the latest right of all EARLIER slices (exclusive
-        # prefix max over per-slice argmax); forward = the earliest
-        # right of all LATER slices (suffix min, ties to greatest rid);
-        # nearest carries both. A carried row duplicates a real right
-        # row, and the kernel emits left rows only, so output never
-        # duplicates. Boundary ties are impossible: a carry's t is
-        # strictly outside its target slice's time range.
-        want_back = direction in ("backward", "nearest")
-        want_fwd = direction in ("forward", "nearest")
-        is_r = F.col("side") == F.lit(side_right)
-        # forward-carry tie at equal t must MATCH the kernel's pick:
-        # the nearest kernel's suffix-min of positions takes the
-        # SMALLEST rid among tied rights, while the pure forward
-        # merge (max-accumulate over the negated lane) takes the
-        # GREATEST — a mismatched carry would make the split path
-        # diverge from the unsplit one exactly on carried ties
-        fwd_tie = (F.col("rid") if direction == "nearest"
-                   else (-F.col("rid")))
-        per_slice = (
-            sliced.filter(F.col("nsl") > 1)  # every present slice of a
-            # hot key, even ones with left rows only — they need carry
-            .groupBy(*knames, "slc")
-            .agg(
-                F.max(
-                    F.when(is_r, F.struct(F.col("t"), F.col("rid")))
-                ).alias("mx"),
-                F.min(
-                    F.when(is_r, F.struct(
-                        F.col("t"), fwd_tie.alias("r2")
-                    ))
-                ).alias("mn"),
-            )
-            .collect()
-        )
-        # the per-slice collect materialized the sliced persist — the
-        # split's input key-stream cache is no longer needed
-        _ic = getattr(sliced, "_arcade_input_cache", None)
-        if _ic is not None:
-            _ic.unpersist()
-        from collections import defaultdict
-
-        per_key: dict[tuple, list] = defaultdict(list)
-        for r in per_slice:
-            kv = _row_key(r, knames)
-            mx = (None if r["mx"] is None
-                  else (int(r["mx"]["t"]), int(r["mx"]["rid"])))
-            mn = (None if r["mn"] is None
-                  else (int(r["mn"]["t"]),
-                        int(r["mn"]["r2"]) if direction == "nearest"
-                        else -int(r["mn"]["r2"])))
-            per_key[kv].append((int(r["slc"]), mx, mn))
-        carry_rows = []
-        for kv, lst in per_key.items():
-            lst.sort()
-            if want_back:
-                best = None
-                for i in range(1, len(lst)):
-                    cand = lst[i - 1][1]
-                    if cand is not None and (best is None or cand > best):
-                        best = cand
-                    if best is not None:
-                        carry_rows.append(
-                            (*kv, best[0], side_right, best[1], lst[i][0])
-                        )
-            if want_fwd:
-                best = None
-                # tie key mirrors fwd_tie: smallest rid for nearest
-                # (the kernel's suffix-min), greatest for forward
-                _fk = ((lambda c: (c[0], c[1]))
-                       if direction == "nearest"
-                       else (lambda c: (c[0], -c[1])))
-                for i in range(len(lst) - 2, -1, -1):
-                    cand = lst[i + 1][2]
-                    if cand is not None and (
-                        best is None or _fk(cand) < _fk(best)
-                    ):
-                        best = cand
-                    if best is not None:
-                        carry_rows.append(
-                            (*kv, best[0], side_right, best[1], lst[i][0])
-                        )
-        base_cols = [*knames, "t", "side", "rid", "slc"]
-        u = sliced.select(*base_cols)
-        if carry_rows:
-            lanes_sch = ", ".join(
-                f"{k} {'binary' if b else 'long'}"
-                for k, b in zip(knames, lane_is_bin)
-            )
-            carry_df = spark.createDataFrame(
-                carry_rows,
-                schema=f"{lanes_sch}, t long, side int, rid long, slc long",
-            )
-            u = u.unionByName(carry_df)
-        u = u.repartition(*[F.col(k) for k in knames], F.col("slc"))
-    else:
-        u = u_base.repartition(*[F.col(k) for k in knames])
-
     tol = tolerance
-    inner_only = not keep_a
-    n_by_bin = list(lane_is_bin)
 
     def asof_merge(batches):
-        chunks = [pa.Table.from_batches([b]) for b in batches]
-        if not chunks:
+        tbl = _task_table(batches)
+        if tbl is None:
             return
-        tbl = pa.concat_tables(chunks).combine_chunks()
-        n = tbl.num_rows
-        if n == 0:
-            return
-        lanes = []
-        orig_bin = []  # original binary lane values for output
-        for i in range(m):
-            arr = tbl.column(f"k{i}")
-            if n_by_bin[i]:
-                obj = arr.to_numpy(zero_copy_only=False)
-                _, codes = np.unique(obj, return_inverse=True)
-                lanes.append(codes.astype(np.int64))
-                orig_bin.append(obj)
-            else:
-                lanes.append(
-                    arr.to_numpy(zero_copy_only=False).astype(np.int64)
-                )
-                orig_bin.append(None)
-        t = tbl.column("t").to_numpy(zero_copy_only=False).astype(np.int64)
+        kl = _win_lanes(tbl, knames, lane_is_bin)
+        t = _i64(tbl, "t")
         side = tbl.column("side").to_numpy(zero_copy_only=False)
-        rid = tbl.column("rid").to_numpy(zero_copy_only=False).astype(np.int64)
+        rid = _i64(tbl, "rid")
         # ~t (= -t-1) is an order-reversing involution with no wrap at
         # int64 min, and its pairwise differences equal those of -t
         t_sort = np.bitwise_not(t) if negate else t
-        keys = (rid, side, t_sort)
-        slc = None
-        if with_slices:
-            slc = (
-                tbl.column("slc").to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            keys = keys + (slc,)
-        order = np.lexsort(keys + tuple(reversed(lanes)))
+        order, change = _sort_runs(tbl, kl, [t_sort, side, rid])
+        n = order.size
         side_s = side[order]
         t_s = t_sort[order]
         rid_s = rid[order]
         idx = np.arange(n, dtype=np.int64)
-        change = np.zeros(n, dtype=bool)
-        change[0] = True
-        for lane in lanes:
-            ls = lane[order]
-            change[1:] |= ls[1:] != ls[:-1]
-        if with_slices:
-            # a slice boundary is a run boundary: carry rows supply the
-            # out-of-slice context, so the merge never crosses it
-            ss = slc[order]
-            change[1:] |= ss[1:] != ss[:-1]
-        run_start = np.maximum.accumulate(np.where(change, idx, 0))
+        run_start, run_end = _run_bounds(change)
         is_right = side_s == side_right
         acc = np.maximum.accumulate(np.where(is_right, idx, -1))
         left_pos = idx[~is_right]
@@ -2600,25 +2435,10 @@ def join_asof(
             # forward candidate on the SAME ascending sort: the first
             # in-run position with t strictly greater than the left's
             # (an exact-tie right is already the backward candidate at
-            # gap 0, which wins every tie) via run-bounded binary
-            # search, then a suffix-min of right positions
-            starts_n = np.nonzero(change)[0]
-            run_end = np.repeat(
-                np.append(starts_n[1:], n),
-                np.diff(np.append(starts_n, n)),
-            )
-            q = t_s[left_pos]
-            lo = left_pos + 1
-            hi = run_end[left_pos]
-            while True:
-                active = lo < hi
-                if not active.any():
-                    break
-                mid = (lo + hi) // 2
-                le = t_s[np.minimum(mid, n - 1)] <= q
-                step = active & le
-                lo = np.where(step, mid + 1, lo)
-                hi = np.where(active & ~le, mid, hi)
+            # gap 0, which wins every tie), then a suffix-min of right
+            # positions
+            lo = _run_search(t_s, t_s[left_pos], left_pos + 1,
+                             run_end[left_pos], right=True)
             sufmin = np.minimum.accumulate(
                 np.where(is_right, idx, n)[::-1]
             )[::-1]
@@ -2657,33 +2477,59 @@ def join_asof(
             gap = t_s[left_pos].astype(np.uint64) - t_s[safe].astype(np.uint64)
             ok &= gap <= np.uint64(tol)
             safe = np.where(ok, match, 0)
-        if inner_only:
+        if not keep_a:
             left_pos = left_pos[ok]
             safe = safe[ok]
             ok = ok[ok]
         t_out = t[order]
-        cols_out = []
-        for i in range(m):
-            if n_by_bin[i]:
-                cols_out.append(
-                    pa.array(orig_bin[i][order][left_pos], type=pa.binary())
-                )
-            else:
-                cols_out.append(pa.array(lanes[i][order][left_pos]))
-        cols_out.append(pa.array(t_out[left_pos]))
-        cols_out.append(pa.array(t_out[safe], mask=~ok))
-        cols_out.append(pa.array(rid_s[left_pos]))
-        cols_out.append(pa.array(rid_s[safe], mask=~ok))
         yield pa.RecordBatch.from_arrays(
-            cols_out, names=[*knames, "t", "t_b", "rid_a", "rid_b"]
+            [*_lanes_out(kl, order[left_pos]), pa.array(t_out[left_pos]),
+             pa.array(t_out[safe], mask=~ok), pa.array(rid_s[left_pos]),
+             pa.array(rid_s[safe], mask=~ok)],
+            names=[*knames, "t", "t_b", "rid_a", "rid_b"],
         )
 
-    lanes_ddl = ", ".join(
-        f"{k} {'binary' if b else 'long'}"
-        for k, b in zip(knames, lane_is_bin)
-    )
-    ids = u.mapInArrow(
-        asof_merge, schema=f"{lanes_ddl}, t long, t_b long, rid_a long, rid_b long"
+    def per_slice(u):
+        # every present slice of a hot key, even ones with left rows
+        # only (they need carries): the latest right (max (t, rid)) and
+        # the earliest right (min (t, r2)). r2 ties as the kernel does:
+        # the nearest kernel's suffix-min takes the SMALLEST rid among
+        # tied rights, the forward merge (max-accumulate over the
+        # negated lane) the GREATEST
+        is_r = F.col("side") == F.lit(side_right)
+        r2 = F.col("rid") if nearest else -F.col("rid")
+        return u.filter(F.col("nsl") > 1).groupBy(*knames, "slc").agg(
+            F.max(F.when(is_r, F.struct("t", "rid"))).alias("mx"),
+            F.min(F.when(is_r, F.struct("t", r2.alias("r2")))).alias("mn"),
+        )
+
+    def carries(kv, rows):
+        # a carry's t lies strictly outside its target slice's range,
+        # so it never ties with the slice's own rows
+        if direction in ("backward", "nearest"):
+            best = None  # exclusive prefix max over earlier slices
+            for i in range(1, len(rows)):
+                mx = rows[i - 1]["mx"]
+                if mx is not None:
+                    best = max(best or tuple(mx), tuple(mx))
+                if best:
+                    yield (*kv, best[0], side_right, best[1], rows[i]["slc"])
+        if direction in ("forward", "nearest"):
+            best = None  # exclusive suffix min over later slices
+            for i in range(len(rows) - 2, -1, -1):
+                mn = rows[i + 1]["mn"]
+                if mn is not None:
+                    best = min(best or tuple(mn), tuple(mn))
+                if best:
+                    yield (*kv, best[0], side_right,
+                           best[1] if nearest else -best[1], rows[i]["slc"])
+
+    lanes = _lanes_ddl(knames, lane_is_bin)
+    ids, _split = _keyed_window(
+        spark, lv.unionByName(rv), knames, lane_is_bin, "t", [out_a, out_b],
+        hot_key_threshold, asof_merge,
+        f"{lanes}, t long, t_b long, rid_a long, rid_b long",
+        stitch=_Stitch(per_slice, carries, "t long, side int, rid long, slc long"),
     )
     if keep_a:
         ids = ids.unionByName(
@@ -2697,10 +2543,7 @@ def join_asof(
     # (measured round-8: persisting ids here HURTS — the merge kernel
     # re-run that exchange reuse leaves is cheaper than forcing cache
     # materialization, unlike join_encoded's triple-consumed stream)
-    out_cols = [
-        _group_key_out(F.col(kn), vt).alias(name)
-        for kn, vt, name in zip(knames, vts_a, by_cols)
-    ]
+    out_cols = _lanes_select(vts_a, by_cols)
     out_cols.append(_group_key_out(F.col("t"), vts_a[m]).alias(on))
     out_cols.append(_group_key_out(F.col("t_b"), vts_b[m]).alias(f"{on_b}_b"))
     joined = ids
@@ -2731,10 +2574,7 @@ def join_asof(
             "left" if keep_a else "inner",
         ).drop("row_id")
         out_cols += [F.col(c) for c in project_b]
-    res = joined.select(*out_cols)
-    if with_slices:
-        res._arcade_key_cache = sliced
-    return res
+    return joined.select(*out_cols)
 
 
 def _row_key(row, names) -> tuple:
@@ -2750,9 +2590,9 @@ def _win_lanes(tbl, names: list[str], is_bin: list[bool]):
     """Per-lane (is_null uint8, grouping/sort value, original) arrays
     for a window kernel batch. Int lanes fill nulls with 0 (the
     is_null lane keeps them distinct and NULLS-LAST); binary lanes
-    factorize to dense per-task codes (None → b"" + is_null)."""
-    import pyarrow as pa
-
+    factorize to dense per-task codes (None → b"" + is_null), and the
+    codes are lexicographic (np.unique sorts bytes bytewise), so they
+    order like the values."""
     out = []
     for name, b in zip(names, is_bin):
         arr = tbl.column(name)
@@ -2761,9 +2601,8 @@ def _win_lanes(tbl, names: list[str], is_bin: list[bool]):
         isn = arr.is_null().to_numpy(zero_copy_only=False).astype(np.uint8)
         if b:
             obj = arr.to_numpy(zero_copy_only=False)
-            filled = np.array(
-                [b"" if v is None else v for v in obj], dtype=object
-            )
+            filled = (obj if not arr.null_count else
+                      arr.fill_null(b"").to_numpy(zero_copy_only=False))
             _, codes = np.unique(filled, return_inverse=True)
             out.append((isn, codes.astype(np.int64), obj))
         else:
@@ -2773,6 +2612,97 @@ def _win_lanes(tbl, names: list[str], is_bin: list[bool]):
             )
             out.append((isn, vals, None))
     return out
+
+
+# --- kernel prelude shared by the per-key window kernels -------------
+
+
+def _task_table(batches):
+    """One kernel task's batches as a single-chunk table, or None when
+    the task has no rows."""
+    batches = list(batches)
+    if not batches:
+        return None
+    tbl = pa.Table.from_batches(batches).combine_chunks()
+    return tbl if tbl.num_rows else None
+
+
+def _i64(tbl, name: str) -> np.ndarray:
+    return tbl.column(name).to_numpy(zero_copy_only=False).astype(np.int64)
+
+
+def _sort_runs(tbl, kl, minor: list) -> tuple[np.ndarray, np.ndarray]:
+    """Sort a task's rows by (key lanes ``kl``, ``slc`` in a sliced
+    stream, then ``minor``, most significant first) and mark where each
+    run starts. A run is one key, or one (key, slice): a slice boundary
+    is a run boundary, and the stitch supplies whatever lies across it.
+    Returns (order, change)."""
+    major = [a for isn, val, _o in kl for a in (isn, val)]
+    if "slc" in tbl.column_names:
+        major.append(_i64(tbl, "slc"))
+    order = np.lexsort(tuple(reversed(major + list(minor))))
+    change = np.zeros(order.size, dtype=bool)
+    change[0] = True
+    for lane in major:
+        s = lane[order]
+        change[1:] |= s[1:] != s[:-1]
+    return order, change
+
+
+def _run_bounds(change: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(run start, exclusive run end) of every sorted position."""
+    starts = np.flatnonzero(change)
+    lens = np.diff(np.append(starts, change.size))
+    return np.repeat(starts, lens), np.repeat(starts + lens, lens)
+
+
+def _sliced_runs(tbl, order, change):
+    """(starts, ends, keep) of the sorted runs, ``keep`` marking the runs
+    of sliced keys (``nsl`` > 1): summary passes emit only those, so the
+    driver collect stays O(hot rows / threshold)."""
+    starts = np.flatnonzero(change)
+    ends = np.append(starts[1:], change.size)
+    return starts, ends, _i64(tbl, "nsl")[order][starts] > 1
+
+
+def _run_search(vals, q, lo, hi, right: bool) -> np.ndarray:
+    """Per row, the first position p in [lo, hi) of the sorted ``vals``
+    with vals[p] > q (``right``) or vals[p] >= q — hi if none. A
+    vectorized binary search bounded to each row's run (a global
+    searchsorted would compare across runs): ≈log2 n numpy passes."""
+    last = vals.size - 1
+    while True:
+        active = lo < hi
+        if not active.any():
+            return lo
+        mid = (lo + hi) // 2
+        v = vals[np.minimum(mid, last)]
+        adv = active & ((v <= q) if right else (v < q))
+        lo = np.where(adv, mid + 1, lo)
+        hi = np.where(active & ~adv, mid, hi)
+
+
+def _lanes_out(kl, sel) -> list:
+    """Arrow output arrays of loaded lanes at row indices ``sel``."""
+    return [
+        pa.array(o[sel], type=pa.binary()) if o is not None
+        else pa.array(v[sel])
+        for _isn, v, o in kl
+    ]
+
+
+def _lanes_ddl(names: list[str], is_bin: list[bool]) -> str:
+    return ", ".join(
+        f"{k} {'binary' if b else 'long'}" for k, b in zip(names, is_bin)
+    )
+
+
+def _lanes_select(vts: list[str], names: list[str], first: int = 0) -> list:
+    """Lanes ``k{first}``.. restored to their logical types as ``names``."""
+    return [
+        _group_key_out(F.col(f"k{first + i}"), vt).alias(n)
+        for i, (vt, n) in enumerate(zip(vts, names))
+    ]
 
 
 def top_per_key(
@@ -2824,7 +2754,6 @@ def top_per_key(
     three: a row's partition-local rank is a lower bound on its global
     rank, so the per-partition keep is a superset of the survivors.
     Output: group columns, ``rn`` (1-based), projection columns."""
-    import pyarrow as pa
     from arcade_spark.partread import key_rowid_parts, materialize_rowids_parts
 
     group_cols = [group_cols] if isinstance(group_cols, str) else list(group_cols)
@@ -2852,7 +2781,7 @@ def top_per_key(
         raise ValueError(
             f"mode must be row_number/rank/dense_rank: {mode!r}"
         )
-    vts = _lane_vtypes(spark, out_dir, group_cols + order_cols)
+    vts = _lane_vtypes(out_dir, group_cols + order_cols)
     g = len(group_cols)
     for c, vt in zip(group_cols, vts[:g]):
         if vt in ("double", "float"):
@@ -2875,13 +2804,10 @@ def top_per_key(
 
     def topn_kernel(emit_rank: bool):
         def kernel(batches):
-            chunks = [pa.Table.from_batches([b]) for b in batches]
-            if not chunks:
+            tbl = _task_table(batches)
+            if tbl is None:
                 return
-            tbl = pa.concat_tables(chunks).combine_chunks()
             nr = tbl.num_rows
-            if nr == 0:
-                return
             gl = _win_lanes(tbl, knames[:g], g_bin)
             ol = _win_lanes(tbl, knames[g:], o_bin)
             rid = tbl.column("rid").to_numpy(zero_copy_only=False).astype(np.int64)
@@ -2943,10 +2869,7 @@ def top_per_key(
 
         return kernel
 
-    lanes_ddl = ", ".join(
-        f"{k} {'binary' if b else 'long'}"
-        for k, b in zip(knames, g_bin + o_bin)
-    )
+    lanes_ddl = _lanes_ddl(knames, g_bin + o_bin)
     partial = keyed.mapInArrow(
         topn_kernel(False), schema=f"{lanes_ddl}, rid long"
     )
@@ -3010,27 +2933,19 @@ def _split_hot_keys(
     symmetrically replicates rows in that band ABOVE a slice's lower
     boundary into the PREVIOUS slice — two-sided RANGE frames need
     both; ``S >= overlap + overlap_after`` keeps the bands disjoint
-    (at most one copy per row per direction). ``overlap = 0``
-    (sessionize) adds no context rows; boundary stitching is the
-    caller's job via the ``nsl`` column (> 1 marks sliced keys).
+    (at most one copy per row per direction). ``overlap = 0`` adds no
+    context rows; the ``nsl`` column (> 1 marks sliced keys) lets a
+    stitch find the sliced keys.
 
-    Returns ``(sliced_df, n_hot)`` where sliced_df adds ``slc`` (long),
-    ``emit`` (boolean) and ``nsl`` (long, slices for the row's key) to
-    ``keyed``'s columns — or ``(None, 0)`` when no key is hot. All
-    arithmetic is exact int64 (Spark ``div``/``%`` on longs; the
-    driver-side slice math uses Python ints)."""
-    from pyspark import StorageLevel
-
-    # persist the NARROW key stream before the stats pass (round-8,
-    # guide §5): the stream is consumed again right below by the
-    # hot-key join/explode, so without this the kernel decode runs
-    # twice (stats + slicing). Rows are tens of bytes. The handle is
-    # attached to the returned frame as ``_arcade_input_cache`` —
-    # callers unpersist it once their own downstream persist is
-    # materialized (or it falls to the next release_key_caches()).
-    keyed_c = keyed.persist(StorageLevel.MEMORY_AND_DISK)
+    ``keyed`` is read twice (stats pass, then slicing): the caller
+    persists it (``_keyed_window`` does). Returns ``(sliced_df, n_hot)``
+    where sliced_df adds ``slc`` (long), ``emit`` (boolean) and ``nsl``
+    (long, slices for the row's key) to ``keyed``'s columns — or
+    ``(None, 0)`` when no key is hot. All arithmetic is exact int64
+    (Spark ``div``/``%`` on longs; the driver-side slice math uses
+    Python ints)."""
     stats_df = (
-        keyed_c.groupBy(*knames)
+        keyed.groupBy(*knames)
         .agg(
             F.count("*").alias("_cnt"),
             F.min(t_name).alias("_tmin"),
@@ -3038,35 +2953,22 @@ def _split_hot_keys(
         )
         .filter(F.col("_cnt") > threshold)
     )
-    if row_bound is not None and row_bound // max(threshold, 1) <= max_hot:
-        # a key is hot only past `threshold` rows, so n_hot <=
-        # row_bound/threshold — when that bound already fits max_hot
-        # the guard count is redundant and one whole action round is
-        # saved (round-8; the stats pass is the split's serial prefix)
-        hot = stats_df.collect()
-        if not hot:
-            keyed_c.unpersist()
+    # a key is hot only past `threshold` rows, so n_hot <= row_bound /
+    # threshold: a guard count runs only when that bound does not
+    # already fit max_hot — a full count, never limit(n+1).collect(),
+    # whose CollectLimit re-runs the key stream batch by batch
+    if row_bound is None or row_bound // max(threshold, 1) > max_hot:
+        n_hot = stats_df.count()
+        if n_hot > max_hot:
+            raise ValueError(
+                f"more than {max_hot} keys exceed {threshold} rows — "
+                "raise the hot-key threshold or aggregate first"
+            )
+        if n_hot == 0:
             return None, 0
-    else:
-        stats = stats_df.persist(StorageLevel.MEMORY_AND_DISK)
-        # persist + full count, never limit(n+1).collect(): CollectLimit
-        # executes partition-batch by partition-batch and re-runs the
-        # whole keyed-stream kernel several times (measured 6x the cost
-        # of one full pass on a 200k-row stream)
-        try:
-            n_hot = stats.count()
-            if n_hot == 0:
-                keyed_c.unpersist()
-                return None, 0
-            if n_hot > max_hot:
-                keyed_c.unpersist()
-                raise ValueError(
-                    f"more than {max_hot} keys exceed {threshold} rows — "
-                    "raise the hot-key threshold or aggregate first"
-                )
-            hot = stats.collect()
-        finally:
-            stats.unpersist()
+    hot = stats_df.collect()
+    if not hot:
+        return None, 0
     rows = []
     for r in hot:
         cnt, tmin, tmax = int(r["_cnt"]), int(r["_tmin"]), int(r["_tmax"])
@@ -3081,11 +2983,8 @@ def _split_hot_keys(
                       -(-(span + 1) // nsl_target), 1)
         nsl = span // s_width + 1
         rows.append((*_row_key(r, knames), tmin, s_width, nsl))
-    lanes_ddl = ", ".join(
-        f"{k} {'binary' if b else 'long'}" for k, b in zip(knames, k_bin)
-    )
     hot_df = spark.createDataFrame(
-        rows, schema=f"{lanes_ddl}, _tmin long, _s long, _nsl long"
+        rows, schema=f"{_lanes_ddl(knames, k_bin)}, _tmin long, _s long, _nsl long"
     )
     j = keyed.join(F.broadcast(hot_df), on=knames, how="left")
     slc = F.expr(f"CASE WHEN _s IS NULL THEN 0L "
@@ -3128,7 +3027,6 @@ def _split_hot_keys(
             F.coalesce(F.col("_nsl"), F.lit(1)).alias("nsl"),
         )
     )
-    out._arcade_input_cache = keyed_c
     return out, len(hot)
 
 
@@ -3137,10 +3035,129 @@ def _manifest_total_rows(out_dir: str) -> int:
     read) — the free upper bound that lets the per-key window ops skip
     the hot-key stats pass entirely when no key CAN exceed the
     threshold."""
-    from arcade_spark.partread import load_manifest
+    return sum(n for _pid, n in load_manifest(out_dir)[1])
 
-    _cols, parts = load_manifest(out_dir)
-    return sum(n for _pid, n in parts)
+
+class _Stitch(NamedTuple):
+    """How a split operator puts its slices back together (see
+    ``_keyed_window``). ``summary(u)`` is the per-slice summary pass
+    over the persisted slice stream, one or more rows per sliced (key,
+    ``slc``); ``rows(kv, summaries)`` turns one key's summary rows, in
+    slice order, into stitch rows (key lanes first, schema ``ddl``
+    after them). ``bases`` maps each base column to its value for rows
+    no base reaches; None makes the stitch rows carries."""
+
+    summary: Callable[[DataFrame], DataFrame]
+    rows: Callable[[tuple, list], Iterator[tuple]]
+    ddl: str
+    bases: dict | None = None
+
+
+def _keyed_window(
+    spark: SparkSession,
+    keyed: DataFrame,
+    knames: list[str],
+    k_bin: list[bool],
+    t_name: str,
+    out_dirs: list[str],
+    threshold: int | None,
+    kernel,
+    schema: str,
+    overlap: int = 0,
+    overlap_after: int = 0,
+    stitch: _Stitch | None = None,
+) -> tuple[DataFrame, bool]:
+    """Run a per-key ordered-window operator (sessionize, rolling_agg,
+    window_shift, join_asof): ``kernel`` over the key stream ``keyed``
+    (lanes ``knames``, time lane ``t_name``), with the hot-key escape
+    hatch of PLANS.md §9. Returns ``(kernel output, split)``.
+
+    SQL PARTITION BY pins a key's whole timeline to one task. When the
+    manifest row total of ``out_dirs`` exceeds ``threshold`` (None
+    disables), ``_split_hot_keys`` finds the keys with more than
+    ``threshold`` rows and cuts each one's timeline into time-range
+    slices, so every (key, ``slc``) runs as its own task; otherwise —
+    or when no key is hot — the kernel runs over the stream
+    hash-partitioned on the key lanes, and a table too small to hold a
+    hot key pays no stats pass at all. The kernels treat a slice
+    boundary as a run boundary, and the split output is identical to
+    the unsplit one because each slice gets what lies across its
+    boundaries in one of three ways:
+
+    - context bands (``overlap`` / ``overlap_after``, bounded
+      rolling_agg frames): rows near a boundary replicate into the
+      neighbouring slice as non-emitting rows; no stitch is needed;
+    - bases (``stitch.bases``; sessionize, cumulative rolling_agg): a
+      summary pass emits one row per sliced (key, slc), the driver
+      folds them in slice order into per-slice bases (exact Python
+      ints), and the bases broadcast-join on (key, slc) for the
+      final kernel to fold in;
+    - carries (``stitch.bases`` None; window_shift, join_asof): the
+      driver turns the summaries into context rows (``emit`` false)
+      unioned into their target slices.
+
+    The final kernel runs repartitioned on (key, slc). The engine owns
+    every persist of a split: the key stream (read by the stats pass,
+    the slicing and the summary pass) and, with a stitch, the slice
+    stream (read by the summary pass and the final kernel — persisted
+    after the (key, slc) shuffle for bases, whose final kernel reads
+    it in place, and before it for carries, whose union reshuffles).
+    On an exception it unpersists all of them; the key stream is
+    dropped once the summary pass has materialized the slice stream;
+    what the returned lazy plan still reads goes to the
+    ``_KEY_CACHES`` registry (``release_key_caches()``)."""
+    by_key = [F.col(k) for k in knames]
+    row_bound = (sum(_manifest_total_rows(d) for d in out_dirs)
+                 if threshold is not None else 0)
+    if threshold is None or row_bound <= threshold:
+        return keyed.repartition(*by_key).mapInArrow(kernel, schema), False
+    release_key_caches()
+    held = [keyed.persist(StorageLevel.MEMORY_AND_DISK)]
+    try:
+        sliced, _n_hot = _split_hot_keys(
+            spark, keyed, knames, k_bin, t_name, overlap=overlap,
+            threshold=threshold, overlap_after=overlap_after,
+            row_bound=row_bound,
+        )
+        if sliced is None:
+            keyed.unpersist()
+            return keyed.repartition(*by_key).mapInArrow(kernel, schema), False
+        by_slice = [*by_key, F.col("slc")]
+        u = sliced.repartition(*by_slice)
+        if stitch is not None:
+            carry = stitch.bases is None
+            u = (sliced if carry else u).persist(StorageLevel.MEMORY_AND_DISK)
+            held.append(u)
+            per_key: dict[tuple, list] = defaultdict(list)
+            for r in stitch.summary(u).collect():
+                per_key[_row_key(r, knames)].append(r)
+            held.remove(keyed)  # the collect materialized u
+            keyed.unpersist()
+            rows = [
+                row for kv, lst in per_key.items()
+                for row in stitch.rows(kv, sorted(lst, key=lambda r: r["slc"]))
+            ]
+            extra = spark.createDataFrame(
+                rows, schema=f"{_lanes_ddl(knames, k_bin)}, {stitch.ddl}"
+            )
+            if carry:
+                u = u.drop("nsl").unionByName(
+                    extra.withColumn("emit", F.lit(False))
+                ).repartition(*by_slice)
+            else:
+                u = u.join(
+                    F.broadcast(extra), on=[*knames, "slc"], how="left"
+                ).withColumns({
+                    c: F.coalesce(F.col(c), F.lit(v))
+                    for c, v in stitch.bases.items()
+                })
+    except BaseException:
+        for df in held:
+            df.unpersist()
+        raise
+    for df in held:
+        _register_key_cache(df)
+    return u.mapInArrow(kernel, schema), True
 
 
 _BCAST_MAT_MAX_RAW = 128 << 20  # decoded-bytes bound for payload broadcasts
@@ -3192,23 +3209,17 @@ def sessionize(
     one row per session (key..., session, n_events, ts_start, ts_end)
     — the output a 100-TB pipeline actually stores.
 
-    Hot-key escape hatch (PLANS.md §9, gap-boundary stitching): a key
-    with more than ``hot_key_threshold`` rows pre-splits into
-    time-range slices (no context rows); a summary pass emits ONE row
-    per sliced (key, slc) — local session count + first/last ts — the
-    driver stitches bases (a session bridging a boundary merges when
-    ``first(s) − last(s−1) <= gap``, exactly the batch ``> gap`` bump
-    complement), and the final pass adds each slice's base to its local
-    ordinals. Output is identical to the unsplit path; ``sessions``
-    mode merges boundary-straddling aggregate rows with one O(sessions)
-    group-by. The stats pass is skipped when the manifest row total
-    cannot exceed the threshold; ``hot_key_threshold=None`` disables.
+    Keys over ``hot_key_threshold`` rows split by time range
+    (``_keyed_window``; None disables). Stitch: bases — each slice's
+    session count and first/last ts re-base the next slice's ordinals
+    (a session bridging a boundary merges when ``first(s) − last(s−1)
+    <= gap``, the complement of the batch ``> gap`` bump), and split
+    ``sessions`` rows merge in one O(sessions) group-by.
 
     Rows with a null key component or null timestamp are dropped
     (SQL: they join no session — filter them explicitly if needed).
     Equal timestamps within a key always share a session (gap 0), so
     the output is deterministic under encode-order ties."""
-    import pyarrow as pa
     from arcade_spark.partread import key_rowid_parts
 
     key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
@@ -3218,7 +3229,7 @@ def sessionize(
         raise ValueError(f"gap must be > 0: {gap}")
     if emit not in ("rows", "sessions"):
         raise ValueError(f"emit must be 'rows' or 'sessions': {emit!r}")
-    vts = _lane_vtypes(spark, out_dir, key_cols + [ts_col])
+    vts = _lane_vtypes(out_dir, key_cols + [ts_col])
     g = len(key_cols)
     _require_int64_lane(vts[g], ts_col, "sessionize timestamp")
     for c, vt in zip(key_cols, vts[:g]):
@@ -3232,253 +3243,98 @@ def sessionize(
     )
     k_bin = [vt in ("str", "binary") for vt in kvts[:g]]
     knames = [f"k{i}" for i in range(g)]
-    gap_units = gap
     want_rows = emit == "rows"
 
-    def _make_kernel(with_slices: bool, summary: bool):
-        def kern(batches):
-            chunks = [pa.Table.from_batches([b]) for b in batches]
-            if not chunks:
-                return
-            tbl = pa.concat_tables(chunks).combine_chunks()
-            nr = tbl.num_rows
-            if nr == 0:
-                return
-            kl = _win_lanes(tbl, knames, k_bin)
-            ts = (
-                tbl.column(f"k{g}").to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            rid = (
-                tbl.column("rid").to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            ss = None
-            keys = [rid, ts]
-            if with_slices:
-                slc = (
-                    tbl.column("slc").to_numpy(zero_copy_only=False)
-                    .astype(np.int64)
-                )
-                keys.append(slc)
-            for isn, val, _o in reversed(kl):
-                keys.append(val)
-                keys.append(isn)
-            order = np.lexsort(tuple(keys))
-            idx = np.arange(nr, dtype=np.int64)
-            change = np.zeros(nr, dtype=bool)
-            change[0] = True
-            for isn, val, _o in kl:
-                vs = val[order]
-                change[1:] |= vs[1:] != vs[:-1]
-            if with_slices:
-                # a slice boundary is a run boundary: local ordinals
-                # restart and the stitch pass re-bases them
-                ss = slc[order]
-                change[1:] |= ss[1:] != ss[:-1]
-            ts_s = ts[order]
-            bump = np.zeros(nr, dtype=bool)
-            bump[1:] = ts_s[1:] - ts_s[:-1] > gap_units
-            new_sess = change | bump
-            gs = np.cumsum(new_sess)  # 1-based global session ordinal
-            first_gs = np.maximum.accumulate(np.where(change, gs, 0))
-            sess = gs - first_gs  # 0-based session id within run
-            if summary:
-                # one row per SLICED (key, slc) run: local session count
-                # + boundary timestamps (unsliced keys skipped — the
-                # collect stays O(hot rows / threshold))
-                nsl = (
-                    tbl.column("nsl").to_numpy(zero_copy_only=False)
-                    .astype(np.int64)
-                )
-                starts = np.nonzero(change)[0]
-                ends = np.append(starts[1:], nr)
-                keep = nsl[order][starts] > 1
-                rs = starts[keep]
-                re_ = ends[keep]
-                if rs.size == 0:
-                    return
-                sel = order[rs]
-                cols_out = []
-                for (isn, val, obj), b in zip(kl, k_bin):
-                    if b:
-                        cols_out.append(pa.array(obj[sel], type=pa.binary()))
-                    else:
-                        cols_out.append(pa.array(val[sel]))
-                cols_out.append(pa.array(ss[rs]))
-                cols_out.append(pa.array(sess[re_ - 1] + 1))
-                cols_out.append(pa.array(ts_s[rs]))
-                cols_out.append(pa.array(ts_s[re_ - 1]))
-                yield pa.RecordBatch.from_arrays(
-                    cols_out,
-                    names=[*knames, "slc", "n_sess", "t_first", "t_last"],
-                )
-                return
-            if with_slices:
-                bs = (
-                    tbl.column("base").to_numpy(zero_copy_only=False)
-                    .astype(np.int64)
-                )
-                sess = sess + bs[order]
-            if want_rows:
-                cols_out = []
-                for (isn, val, obj), b in zip(kl, k_bin):
-                    if b:
-                        cols_out.append(
-                            pa.array(obj[order], type=pa.binary())
-                        )
-                    else:
-                        cols_out.append(pa.array(val[order]))
-                cols_out.append(pa.array(ts_s))
-                cols_out.append(pa.array(sess))
-                yield pa.RecordBatch.from_arrays(
-                    cols_out, names=[*knames, "t", "session"]
-                )
-                return
-            # per-session aggregate: runs of new_sess
-            starts = np.nonzero(new_sess)[0]
-            ends = np.append(starts[1:], nr)
-            sel = order[starts]
-            cols_out = []
-            for (isn, val, obj), b in zip(kl, k_bin):
-                if b:
-                    cols_out.append(pa.array(obj[sel], type=pa.binary()))
-                else:
-                    cols_out.append(pa.array(val[sel]))
-            cols_out.append(pa.array(sess[starts]))
-            cols_out.append(pa.array(ends - starts))
-            cols_out.append(pa.array(ts_s[starts]))
-            cols_out.append(pa.array(ts_s[ends - 1]))
+    def sessions(tbl):
+        kl = _win_lanes(tbl, knames, k_bin)
+        ts = _i64(tbl, f"k{g}")
+        order, change = _sort_runs(tbl, kl, [ts, _i64(tbl, "rid")])
+        ts_s = ts[order]
+        bump = np.zeros(ts_s.size, dtype=bool)
+        bump[1:] = ts_s[1:] - ts_s[:-1] > gap
+        new_sess = change | bump
+        gs = np.cumsum(new_sess)  # 1-based global session ordinal
+        sess = gs - np.maximum.accumulate(np.where(change, gs, 0))
+        return kl, order, change, ts_s, new_sess, sess
+
+    def summary_kernel(batches):
+        # per sliced (key, slc): local session count + boundary ts
+        tbl = _task_table(batches)
+        if tbl is None:
+            return
+        kl, order, change, ts_s, _new, sess = sessions(tbl)
+        starts, ends, keep = _sliced_runs(tbl, order, change)
+        rs, re_ = starts[keep], ends[keep]
+        if rs.size:
+            sel = order[rs]
             yield pa.RecordBatch.from_arrays(
-                cols_out,
-                names=[*knames, "session", "n_events", "t_start", "t_end"],
+                [*_lanes_out(kl, sel), pa.array(_i64(tbl, "slc")[sel]),
+                 pa.array(sess[re_ - 1] + 1), pa.array(ts_s[rs]),
+                 pa.array(ts_s[re_ - 1])],
+                names=[*knames, "slc", "n_sess", "t_first", "t_last"],
             )
 
-        return kern
-
-    lanes_ddl = ", ".join(
-        f"{k} {'binary' if b else 'long'}" for k, b in zip(knames, k_bin)
-    )
-    key_out = [
-        _group_key_out(F.col(kn), vt).alias(name)
-        for kn, vt, name in zip(knames, kvts, key_cols)
-    ]
-    sliced = None
-    _rb = (_manifest_total_rows(out_dir)
-           if hot_key_threshold is not None else 0)
-    if hot_key_threshold is not None and _rb > hot_key_threshold:
-        sliced, _n_hot = _split_hot_keys(
-            spark, keyed, knames, k_bin, f"k{g}",
-            overlap=0, threshold=hot_key_threshold, row_bound=_rb,
-        )
-    if sliced is None:
-        u = keyed.repartition(*[F.col(k) for k in knames])
+    def kernel(batches):
+        tbl = _task_table(batches)
+        if tbl is None:
+            return
+        kl, order, _change, ts_s, new_sess, sess = sessions(tbl)
+        if "base" in tbl.column_names:
+            sess = sess + _i64(tbl, "base")[order]
         if want_rows:
-            ids = u.mapInArrow(
-                _make_kernel(False, False),
-                schema=f"{lanes_ddl}, t long, session long",
+            yield pa.RecordBatch.from_arrays(
+                [*_lanes_out(kl, order), pa.array(ts_s), pa.array(sess)],
+                names=[*knames, "t", "session"],
             )
-            return ids.select(
-                *key_out,
-                _group_key_out(F.col("t"), kvts[g]).alias(ts_col),
-                F.col("session"),
-            )
-        ids = u.mapInArrow(
-            _make_kernel(False, False),
-            schema=(
-                f"{lanes_ddl}, session long, n_events long, "
-                f"t_start long, t_end long"
-            ),
+            return
+        # per-session aggregate: runs of new_sess
+        starts = np.flatnonzero(new_sess)
+        ends = np.append(starts[1:], ts_s.size)
+        yield pa.RecordBatch.from_arrays(
+            [*_lanes_out(kl, order[starts]), pa.array(sess[starts]),
+             pa.array(ends - starts), pa.array(ts_s[starts]),
+             pa.array(ts_s[ends - 1])],
+            names=[*knames, "session", "n_events", "t_start", "t_end"],
         )
-        return ids.select(
-            *key_out,
-            F.col("session"),
-            F.col("n_events"),
-            _group_key_out(F.col("t_start"), kvts[g]).alias(f"{ts_col}_start"),
-            _group_key_out(F.col("t_end"), kvts[g]).alias(f"{ts_col}_end"),
-        )
-    # --- split path: summaries → driver stitch → re-based final pass.
-    # The repartitioned slice stream persists so the two passes share
-    # one kernel read; the handle is registered for release.
-    from collections import defaultdict
 
-    from pyspark import StorageLevel
+    def bases(kv, rows):
+        base, prev = 0, None
+        for r in rows:
+            if prev is not None:
+                merge = r["t_first"] - prev["t_last"] <= gap
+                base += prev["n_sess"] - int(merge)
+            yield (*kv, r["slc"], base)
+            prev = r
 
-    release_key_caches()
-    u = sliced.repartition(
-        *[F.col(k) for k in knames], F.col("slc")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _register_key_cache(u)
-    summaries = u.mapInArrow(
-        _make_kernel(True, True),
-        schema=f"{lanes_ddl}, slc long, n_sess long, t_first long, t_last long",
-    ).collect()
-    # the summaries collect materialized u — release the split's input
-    # key-stream cache
-    _ic = getattr(sliced, "_arcade_input_cache", None)
-    if _ic is not None:
-        _ic.unpersist()
-    per_key: dict[tuple, list] = defaultdict(list)
-    for r in summaries:
-        kv = _row_key(r, knames)
-        per_key[kv].append(
-            (int(r["slc"]), int(r["n_sess"]), int(r["t_first"]),
-             int(r["t_last"]))
-        )
-    brows = []
-    for kv, lst in per_key.items():
-        lst.sort()
-        base = 0
-        prev_ns = prev_tl = None
-        for s, ns, tf, tl in lst:
-            if prev_ns is not None:
-                # a session bridges the boundary iff the gap between
-                # the last event before it and the first after it is
-                # <= gap — the exact complement of the batch > gap bump
-                merge = 1 if tf - prev_tl <= gap_units else 0
-                base = base + prev_ns - merge
-            brows.append((*kv, s, base))
-            prev_ns, prev_tl = ns, tl
-    bases_df = spark.createDataFrame(
-        brows, schema=f"{lanes_ddl}, slc long, base long"
+    lanes = _lanes_ddl(knames, k_bin)
+    ids, split = _keyed_window(
+        spark, keyed, knames, k_bin, f"k{g}", [out_dir], hot_key_threshold,
+        kernel,
+        f"{lanes}, t long, session long" if want_rows else
+        f"{lanes}, session long, n_events long, t_start long, t_end long",
+        stitch=_Stitch(
+            lambda u: u.mapInArrow(summary_kernel, f"{lanes}, slc long, "
+                                   "n_sess long, t_first long, t_last long"),
+            bases, "slc long, base long", {"base": 0},
+        ),
     )
-    ub = u.join(
-        F.broadcast(bases_df), on=[*knames, "slc"], how="left"
-    ).withColumn("base", F.coalesce(F.col("base"), F.lit(0)))
+    key_out = _lanes_select(kvts, key_cols)
     if want_rows:
-        ids = ub.mapInArrow(
-            _make_kernel(True, False),
-            schema=f"{lanes_ddl}, t long, session long",
+        return ids.select(
+            *key_out, _group_key_out(F.col("t"), kvts[g]).alias(ts_col),
+            "session",
         )
-        res = ids.select(
-            *key_out,
-            _group_key_out(F.col("t"), kvts[g]).alias(ts_col),
-            F.col("session"),
-        )
-    else:
-        ids = ub.mapInArrow(
-            _make_kernel(True, False),
-            schema=(
-                f"{lanes_ddl}, session long, n_events long, "
-                f"t_start long, t_end long"
-            ),
-        )
-        # boundary-straddling sessions emitted from two slices merge
-        # here — one O(sessions) group-by, not O(events)
-        merged = ids.groupBy(*knames, "session").agg(
+    if split:
+        ids = ids.groupBy(*knames, "session").agg(
             F.sum("n_events").alias("n_events"),
             F.min("t_start").alias("t_start"),
             F.max("t_end").alias("t_end"),
         )
-        res = merged.select(
-            *key_out,
-            F.col("session"),
-            F.col("n_events"),
-            _group_key_out(F.col("t_start"), kvts[g]).alias(f"{ts_col}_start"),
-            _group_key_out(F.col("t_end"), kvts[g]).alias(f"{ts_col}_end"),
-        )
-    res._arcade_key_cache = u
-    return res
+    return ids.select(
+        *key_out, "session", "n_events",
+        _group_key_out(F.col("t_start"), kvts[g]).alias(f"{ts_col}_start"),
+        _group_key_out(F.col("t_end"), kvts[g]).alias(f"{ts_col}_end"),
+    )
 
 
 def join_band(
@@ -3535,9 +3391,9 @@ def join_band(
         raise ValueError(f"projection name clash across sides: {sorted(clash)}")
     m = len(by_cols)
 
-    vts_a = _lane_vtypes(spark, out_a, by_cols + [on_a])
+    vts_a = _lane_vtypes(out_a, by_cols + [on_a])
     _require_int64_lane(vts_a[m], on_a, "band-join on")
-    vts_b = _lane_vtypes(spark, out_b, by_cols + [on_b])
+    vts_b = _lane_vtypes(out_b, by_cols + [on_b])
     _require_int64_lane(vts_b[m], on_b, "band-join on")
     for i, (va, vb) in enumerate(zip(vts_a, vts_b)):
         if (va in ("str", "binary")) != (vb in ("str", "binary")):
@@ -3679,10 +3535,8 @@ def rolling_agg(
     BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW`` frame, peers of the
     current timestamp included). ``window_after`` extends the frame
     forward — ``RANGE BETWEEN window PRECEDING AND window_after
-    FOLLOWING`` (centered/leading windows); under the hot-key split
-    the context bands replicate in BOTH directions, so every emitted
-    row's two-sided frame is complete in its own task. Not combinable
-    with ``window=None`` (an unbounded-plus-following frame would need
+    FOLLOWING`` (centered/leading windows). Not combinable with
+    ``window=None`` (an unbounded-plus-following frame would need
     emit-masked stitch summaries — unimplemented).
 
     Scale design: narrow (key lanes, ts, [agg lane], rid) rows, one
@@ -3691,20 +3545,13 @@ def rolling_agg(
     passes, no per-key Python) resolve every frame — O(n log n) per
     task, payload never moves.
 
-    Hot-key escape hatch (PLANS.md §9): a key with more than
-    ``hot_key_threshold`` rows pre-splits into time-range slices with
-    window-width context overlap, so no task absorbs the whole
-    timeline — each emitted row's trailing frame is complete inside
-    its own (key, slc) task, and output is byte-identical to the
-    unsplit path. Cumulative frames (``window=None``) cannot carry
-    context overlap; they stitch instead (the sessionize pattern): a
-    summary pass emits one row per sliced (key, slc) with the slice's
-    total count/sum/min/max, the driver prefix-combines those into
-    per-slice BASES (exact Python-int arithmetic, overflow-checked),
-    and the final pass folds each row's local frame with its slice's
-    base. The stats pass is skipped entirely (zero overhead) when the
-    manifest row total cannot exceed the threshold;
-    ``hot_key_threshold=None`` disables splitting.
+    Keys over ``hot_key_threshold`` rows split by time range
+    (``_keyed_window``; None disables). Bounded frames need no stitch:
+    window-width context bands (both directions with ``window_after``)
+    complete every emitted row's frame in its own slice. Cumulative
+    frames stitch bases: each slice's count/sum/min/max, prefix-
+    combined in slice order (exact Python ints, overflow-checked),
+    fold into the next slices' frames.
 
     ``aggs`` ⊆ {"count", "sum", "avg", "min", "max"}; all but count
     need an int64-lane ``agg_col`` (int/bigint/ts-as-micros/date/bool)
@@ -3720,7 +3567,6 @@ def rolling_agg(
     nulls explicitly for SQL-identical null handling). Output: key
     columns, ``ts``, then ``w_count`` / ``w_sum`` / ``w_avg`` /
     ``w_min`` / ``w_max`` as requested."""
-    import pyarrow as pa
     from arcade_spark.partread import key_rowid_parts
 
     key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
@@ -3750,7 +3596,7 @@ def rolling_agg(
         raise ValueError("sum/avg/min/max need an agg_col")
     g = len(key_cols)
     lane_cols = key_cols + [ts_col] + ([agg_col] if need_val else [])
-    vts = _lane_vtypes(spark, out_dir, lane_cols)
+    vts = _lane_vtypes(out_dir, lane_cols)
     _require_int64_lane(vts[g], ts_col, "rolling_agg ts")
     if need_val:
         _require_int64_lane(vts[g + 1], agg_col, "rolling_agg agg")
@@ -3765,146 +3611,51 @@ def rolling_agg(
     )
     k_bin = [vt in ("str", "binary") for vt in kvts[:g]]
     knames = [f"k{i}" for i in range(g)]
-    win_units = window
     w_after = int(window_after)
-    want = aggs
-    sliced = None
-    _rb = (_manifest_total_rows(out_dir)
-           if hot_key_threshold is not None else 0)
-    if hot_key_threshold is not None and _rb > hot_key_threshold:
-        sliced, _n_hot = _split_hot_keys(
-            spark, keyed, knames, k_bin, f"k{g}",
-            overlap=0 if cumulative else win_units,
-            threshold=hot_key_threshold,
-            overlap_after=int(window_after),
-            row_bound=_rb,
-        )
-    has_slices = sliced is not None
-    with_bases = has_slices and cumulative
-    _I64_MAX, _I64_MIN = np.iinfo(np.int64).max, np.iinfo(np.int64).min
+    i64_min, i64_max = int(np.iinfo(np.int64).min), int(np.iinfo(np.int64).max)
 
-    def rolling_kernel(batches):
-        chunks = [pa.Table.from_batches([b]) for b in batches]
-        if not chunks:
-            return
-        tbl = pa.concat_tables(chunks).combine_chunks()
-        nr = tbl.num_rows
-        if nr == 0:
-            return
+    def sorted_lanes(tbl):
         kl = _win_lanes(tbl, knames, k_bin)
-        ts = tbl.column(f"k{g}").to_numpy(zero_copy_only=False).astype(np.int64)
-        rid = tbl.column("rid").to_numpy(zero_copy_only=False).astype(np.int64)
-        vals = None
-        if need_val:
-            vals = (
-                tbl.column(f"k{g + 1}")
-                .to_numpy(zero_copy_only=False).astype(np.int64)
-            )
-        slc = emit = None
-        if has_slices:
-            slc = (
-                tbl.column("slc").to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            emit = tbl.column("emit").to_numpy(zero_copy_only=False)
-        keys = [rid, ts]
-        if has_slices:
-            keys.append(slc)
-        for isn, val, _o in reversed(kl):
-            keys.append(val)
-            keys.append(isn)
-        order = np.lexsort(tuple(keys))
+        ts = _i64(tbl, f"k{g}")
+        order, change = _sort_runs(tbl, kl, [ts, _i64(tbl, "rid")])
+        vs = _i64(tbl, f"k{g + 1}")[order] if need_val else None
+        return kl, order, change, ts[order], vs
+
+    def kernel(batches):
+        tbl = _task_table(batches)
+        if tbl is None:
+            return
+        kl, order, change, ts_s, vs = sorted_lanes(tbl)
+        nr = order.size
         idx = np.arange(nr, dtype=np.int64)
-        change = np.zeros(nr, dtype=bool)
-        change[0] = True
-        for isn, val, _o in kl:
-            vs = val[order]
-            change[1:] |= vs[1:] != vs[:-1]
-        if has_slices:
-            # a slice boundary is a run boundary: context rows carry the
-            # previous slice's tail, so frames never need to cross it
-            ss = slc[order]
-            change[1:] |= ss[1:] != ss[:-1]
-        run_start = np.maximum.accumulate(np.where(change, idx, 0))
-        # run_end (exclusive): next run's start, backwards-filled
-        starts = np.nonzero(change)[0]
-        run_end = np.repeat(np.append(starts[1:], nr), np.diff(np.append(starts, nr)))
-        ts_s = ts[order]
+        run_start, run_end = _run_bounds(change)
         if cumulative:
-            # UNBOUNDED PRECEDING: the frame starts at the run start
-            lb = run_start
+            lb = run_start  # UNBOUNDED PRECEDING: the frame starts the run
         else:
-            # frame lower bound: first j in [run_start, i] with
-            # ts[j] >= ts[i] - window — vectorized binary search bounded
-            # to each row's run (global searchsorted can't cross-compare
-            # between runs)
-            # saturating lower bound: ts near int64 min (sentinel stamps)
-            # would wrap ts - win to a huge positive bound and corrupt
-            # the binary search; clamping to int64 min is exact — the
-            # true bound is below every representable value, so the
-            # frame reaches the run start either way
-            i64_min = np.iinfo(np.int64).min
-            q_lo = np.where(
-                ts_s < i64_min + win_units, i64_min, ts_s - win_units
-            )
-            lo = run_start.copy()
-            hi = idx + 1
-            while True:
-                active = lo < hi
-                if not active.any():
-                    break
-                mid = (lo + hi) // 2
-                less = ts_s[np.minimum(mid, nr - 1)] < q_lo
-                step = active & less
-                lo = np.where(step, mid + 1, lo)
-                hi = np.where(active & ~less, mid, hi)
-            lb = lo
-        # frame upper bound: last j in run with ts[j] <= ts[i] + after
-        # (peers after i included) — upper_bound within run; the add
-        # saturates like q_lo (ts near int64 max must not wrap)
-        i64_max = np.iinfo(np.int64).max
-        q_hi = (ts_s if w_after == 0 else np.where(
+            # frame lower bound: first j in [run_start, i] with ts[j] >=
+            # ts[i] - window. The bound saturates: ts near int64 min
+            # would wrap ts - window to a huge positive bound; clamping
+            # is exact, since the frame reaches the run start either way
+            q_lo = np.where(ts_s < i64_min + window, i64_min, ts_s - window)
+            lb = _run_search(ts_s, q_lo, run_start, idx + 1, right=False)
+        # frame upper bound: past the last j in the run with ts[j] <=
+        # ts[i] + after (peers after i included); saturates like q_lo
+        q_hi = ts_s if w_after == 0 else np.where(
             ts_s > i64_max - w_after, i64_max, ts_s + w_after
-        ))
-        lo2 = idx + 1  # peers before/at i are already <= ts[i]
-        hi2 = run_end
-        while True:
-            active = lo2 < hi2
-            if not active.any():
-                break
-            mid = (lo2 + hi2) // 2
-            le = ts_s[np.minimum(mid, nr - 1)] <= q_hi
-            step = active & le
-            lo2 = np.where(step, mid + 1, lo2)
-            hi2 = np.where(active & ~le, mid, hi2)
-        ub = lo2
+        )
+        ub = _run_search(ts_s, q_hi, idx + 1, run_end, right=True)
         cnt = ub - lb
-        bc = bs = bmin = bmax = None
-        if with_bases:
-            # per-(key, slc) BASES from the driver stitch ride every
-            # row (constant within a slice); identities for unsliced
-            # keys / slice 0 arrive as 0 / 0 / int64 max / int64 min
-            bc = (
-                tbl.column("b_cnt").to_numpy(zero_copy_only=False)
-                .astype(np.int64)[order]
-            )
-            bs = (
-                tbl.column("b_sum").to_numpy(zero_copy_only=False)
-                .astype(np.int64)[order]
-            )
-            bmin = (
-                tbl.column("b_min").to_numpy(zero_copy_only=False)
-                .astype(np.int64)[order]
-            )
-            bmax = (
-                tbl.column("b_max").to_numpy(zero_copy_only=False)
-                .astype(np.int64)[order]
-            )
-            cnt = cnt + bc
+        # per-(key, slc) BASES of a cumulative split ride every row;
+        # rows no base reaches carry the identities
+        base = (
+            {c: _i64(tbl, c)[order] for c in ("b_cnt", "b_sum", "b_min", "b_max")}
+            if "b_cnt" in tbl.column_names else None
+        )
+        if base is not None:
+            cnt = cnt + base["b_cnt"]
         out_aggs = {}
-        if "count" in want:
+        if "count" in aggs:
             out_aggs["w_count"] = cnt
-        vs = vals[order] if need_val else None
         if need_sum:
             # int64 prefix sums may WRAP mid-task (a 10^9-row hot key
             # with 10^10-scale values is legitimate), but wrapped
@@ -3916,21 +3667,19 @@ def rolling_agg(
                 ([0.0], np.cumsum(np.abs(vs), dtype=np.float64))
             )
             mass = pref_f[ub] - pref_f[lb]
-            if with_bases:
-                mass = mass + np.abs(bs).astype(np.float64)
+            if base is not None:
+                mass = mass + np.abs(base["b_sum"]).astype(np.float64)
             if mass.size and mass.max() >= float(2**62):
                 raise OverflowError(
                     "a rolling_agg window sum would exceed int64"
                 )
-            pref = np.concatenate(
-                ([0], np.cumsum(vs, dtype=np.int64))
-            )
+            pref = np.concatenate(([0], np.cumsum(vs, dtype=np.int64)))
             wsum = pref[ub] - pref[lb]
-            if with_bases:
-                wsum = wsum + bs
-            if "sum" in want:
+            if base is not None:
+                wsum = wsum + base["b_sum"]
+            if "sum" in aggs:
                 out_aggs["w_sum"] = wsum
-            if "avg" in want:
+            if "avg" in aggs:
                 out_aggs["w_avg"] = (
                     wsum.astype(np.float64) / cnt.astype(np.float64)
                 )
@@ -3944,7 +3693,7 @@ def rolling_agg(
             kq = np.frexp(frame_len.astype(np.float64))[1] - 1
             levels_needed = int(kq.max()) + 1
 
-            def _ext(op):
+            def _ext(op, b):
                 levels = [vs]
                 size = 1
                 while len(levels) < levels_needed:
@@ -3954,82 +3703,36 @@ def rolling_agg(
                 out = np.empty(nr, dtype=np.int64)
                 for k in np.unique(kq):
                     m = kq == k
-                    half = 1 << int(k)
                     lvl = levels[int(k)]
-                    out[m] = op(lvl[lb[m]], lvl[ub[m] - half])
-                return out
+                    out[m] = op(lvl[lb[m]], lvl[ub[m] - (1 << int(k))])
+                return out if base is None else op(out, base[b])
 
-            if "min" in want:
-                ext = _ext(np.minimum)
-                out_aggs["w_min"] = (
-                    np.minimum(ext, bmin) if with_bases else ext
-                )
-            if "max" in want:
-                ext = _ext(np.maximum)
-                out_aggs["w_max"] = (
-                    np.maximum(ext, bmax) if with_bases else ext
-                )
-        sel = None
-        if has_slices:
-            # context rows (emit=false) exist only to complete their
-            # slice's leading frames — their own rows emit from the
-            # previous slice
-            sel = np.nonzero(emit[order])[0]
-        cols_out = []
-        for (isn, val, obj), b in zip(kl, k_bin):
-            lane = obj if b else val
-            lane = lane[order] if sel is None else lane[order][sel]
-            if b:
-                cols_out.append(pa.array(lane, type=pa.binary()))
-            else:
-                cols_out.append(pa.array(lane))
-        cols_out.append(pa.array(ts_s if sel is None else ts_s[sel]))
-        names = [*knames, "t"]
-        for nm, arr in out_aggs.items():
-            cols_out.append(pa.array(arr if sel is None else arr[sel]))
-            names.append(nm)
-        yield pa.RecordBatch.from_arrays(cols_out, names=names)
+            if "min" in aggs:
+                out_aggs["w_min"] = _ext(np.minimum, "b_min")
+            if "max" in aggs:
+                out_aggs["w_max"] = _ext(np.maximum, "b_max")
+        # context rows (emit=false) only complete their slice's leading
+        # frames — they emit from their own slice
+        pos = (np.flatnonzero(tbl.column("emit").to_numpy(
+            zero_copy_only=False)[order])
+            if "emit" in tbl.column_names else slice(None))
+        yield pa.RecordBatch.from_arrays(
+            [*_lanes_out(kl, order[pos]), pa.array(ts_s[pos]),
+             *[pa.array(a[pos]) for a in out_aggs.values()]],
+            names=[*knames, "t", *out_aggs],
+        )
 
     def summary_kernel(batches):
-        # cumulative split pass 1: one row per SLICED (key, slc) run —
-        # the slice's total count/sum/min/max (unsliced keys skipped,
-        # so the driver collect stays O(hot rows / threshold))
-        chunks = [pa.Table.from_batches([b]) for b in batches]
-        if not chunks:
+        # per sliced (key, slc): the slice's count/sum/min/max
+        tbl = _task_table(batches)
+        if tbl is None:
             return
-        tbl = pa.concat_tables(chunks).combine_chunks()
-        nr = tbl.num_rows
-        if nr == 0:
-            return
-        kl = _win_lanes(tbl, knames, k_bin)
-        ts = tbl.column(f"k{g}").to_numpy(zero_copy_only=False).astype(np.int64)
-        rid = tbl.column("rid").to_numpy(zero_copy_only=False).astype(np.int64)
-        slc = tbl.column("slc").to_numpy(zero_copy_only=False).astype(np.int64)
-        nsl = tbl.column("nsl").to_numpy(zero_copy_only=False).astype(np.int64)
-        keys = [rid, ts, slc]
-        for isn, val, _o in reversed(kl):
-            keys.append(val)
-            keys.append(isn)
-        order = np.lexsort(tuple(keys))
-        change = np.zeros(nr, dtype=bool)
-        change[0] = True
-        for isn, val, _o in kl:
-            vs_ = val[order]
-            change[1:] |= vs_[1:] != vs_[:-1]
-        ss = slc[order]
-        change[1:] |= ss[1:] != ss[:-1]
-        starts = np.nonzero(change)[0]
-        ends = np.append(starts[1:], nr)
-        keep = nsl[order][starts] > 1
+        kl, order, change, _ts, vs = sorted_lanes(tbl)
+        starts, ends, keep = _sliced_runs(tbl, order, change)
         rs, re_ = starts[keep], ends[keep]
         if rs.size == 0:
             return
-        s_cnt = re_ - rs
         if need_val:
-            vs = (
-                tbl.column(f"k{g + 1}")
-                .to_numpy(zero_copy_only=False).astype(np.int64)
-            )[order]
             pref_f = np.concatenate(
                 ([0.0], np.cumsum(np.abs(vs), dtype=np.float64))
             )
@@ -4043,155 +3746,54 @@ def rolling_agg(
             s_max = np.maximum.reduceat(vs, starts)[keep]
         else:
             s_sum = np.zeros(rs.size, dtype=np.int64)
-            s_min = np.full(rs.size, _I64_MAX, dtype=np.int64)
-            s_max = np.full(rs.size, _I64_MIN, dtype=np.int64)
+            s_min = np.full(rs.size, i64_max, dtype=np.int64)
+            s_max = np.full(rs.size, i64_min, dtype=np.int64)
         sel = order[rs]
-        cols_out = []
-        for (isn, val, obj), b in zip(kl, k_bin):
-            if b:
-                cols_out.append(pa.array(obj[sel], type=pa.binary()))
-            else:
-                cols_out.append(pa.array(val[sel]))
-        cols_out += [pa.array(ss[rs]), pa.array(s_cnt), pa.array(s_sum),
-                     pa.array(s_min), pa.array(s_max)]
         yield pa.RecordBatch.from_arrays(
-            cols_out,
+            [*_lanes_out(kl, sel), pa.array(_i64(tbl, "slc")[sel]),
+             pa.array(re_ - rs), pa.array(s_sum), pa.array(s_min),
+             pa.array(s_max)],
             names=[*knames, "slc", "s_cnt", "s_sum", "s_min", "s_max"],
         )
 
-    agg_ddl = []
-    if "count" in aggs:
-        agg_ddl.append("w_count long")
-    if "sum" in aggs:
-        agg_ddl.append("w_sum long")
-    if "avg" in aggs:
-        agg_ddl.append("w_avg double")
-    if "min" in aggs:
-        agg_ddl.append("w_min long")
-    if "max" in aggs:
-        agg_ddl.append("w_max long")
-    lanes_ddl = ", ".join(
-        f"{k} {'binary' if b else 'long'}" for k, b in zip(knames, k_bin)
+    def bases(kv, rows):
+        b_cnt, b_sum, b_min, b_max = 0, 0, i64_max, i64_min
+        for r in rows:
+            yield (*kv, r["slc"], b_cnt, b_sum, b_min, b_max)
+            b_cnt += r["s_cnt"]
+            b_sum += r["s_sum"]  # exact Python ints — never wraps
+            if abs(b_sum) >= 2**62:
+                raise OverflowError(
+                    "a cumulative running sum would exceed int64"
+                )
+            b_min, b_max = min(b_min, r["s_min"]), max(b_max, r["s_max"])
+
+    agg_ddl = {"count": "w_count long", "sum": "w_sum long",
+               "avg": "w_avg double", "min": "w_min long", "max": "w_max long"}
+    lanes = _lanes_ddl(knames, k_bin)
+    ids, _split = _keyed_window(
+        spark, keyed, knames, k_bin, f"k{g}", [out_dir], hot_key_threshold,
+        kernel,
+        f"{lanes}, t long, "
+        + ", ".join(agg_ddl[a] for a in agg_ddl if a in aggs),
+        overlap=0 if cumulative else window, overlap_after=w_after,
+        stitch=_Stitch(
+            lambda u: u.mapInArrow(summary_kernel, f"{lanes}, slc long, "
+                                   "s_cnt long, s_sum long, s_min long, s_max long"),
+            bases, "slc long, b_cnt long, b_sum long, b_min long, b_max long",
+            {"b_cnt": 0, "b_sum": 0, "b_min": i64_max, "b_max": i64_min},
+        ) if cumulative else None,
     )
-    key_cache = None
-    if with_bases:
-        # cumulative + hot keys: summaries → driver prefix-combine →
-        # per-slice bases folded in the final pass. The repartitioned
-        # slice stream persists so the two passes share one kernel read.
-        from collections import defaultdict
-
-        from pyspark import StorageLevel
-
-        release_key_caches()
-        u = sliced.repartition(
-            *[F.col(k) for k in knames], F.col("slc")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _register_key_cache(u)
-        key_cache = u
-        summaries = u.mapInArrow(
-            summary_kernel,
-            schema=(f"{lanes_ddl}, slc long, s_cnt long, s_sum long, "
-                    f"s_min long, s_max long"),
-        ).collect()
-        # the summaries collect materialized u — release the split's
-        # input key-stream cache
-        _ic = getattr(sliced, "_arcade_input_cache", None)
-        if _ic is not None:
-            _ic.unpersist()
-        per_key: dict[tuple, list] = defaultdict(list)
-        for r in summaries:
-            kv = _row_key(r, knames)
-            per_key[kv].append(
-                (int(r["slc"]), int(r["s_cnt"]), int(r["s_sum"]),
-                 int(r["s_min"]), int(r["s_max"]))
-            )
-        brows = []
-        for kv, lst in per_key.items():
-            lst.sort()
-            b_cnt, b_sum = 0, 0
-            b_min, b_max = int(_I64_MAX), int(_I64_MIN)
-            for s, sc, ssum, smin, smax in lst:
-                brows.append((*kv, s, b_cnt, b_sum, b_min, b_max))
-                b_cnt += sc
-                b_sum += ssum  # exact Python ints — never wraps
-                if abs(b_sum) >= 2**62:
-                    raise OverflowError(
-                        "a cumulative running sum would exceed int64"
-                    )
-                b_min, b_max = min(b_min, smin), max(b_max, smax)
-        if brows:
-            bases_df = spark.createDataFrame(
-                brows,
-                schema=(f"{lanes_ddl}, slc long, b_cnt long, b_sum long, "
-                        f"b_min long, b_max long"),
-            )
-            ub_df = u.join(
-                F.broadcast(bases_df), on=[*knames, "slc"], how="left"
-            )
-        else:
-            # every hot key collapsed to one slice (zero time span) —
-            # identities only
-            ub_df = u.withColumns({
-                "b_cnt": F.lit(None).cast("long"),
-                "b_sum": F.lit(None).cast("long"),
-                "b_min": F.lit(None).cast("long"),
-                "b_max": F.lit(None).cast("long"),
-            })
-        ub_df = (
-            ub_df
-            .withColumn("b_cnt", F.coalesce(F.col("b_cnt"), F.lit(0)))
-            .withColumn("b_sum", F.coalesce(F.col("b_sum"), F.lit(0)))
-            .withColumn(
-                "b_min", F.coalesce(F.col("b_min"), F.lit(int(_I64_MAX)))
-            )
-            .withColumn(
-                "b_max", F.coalesce(F.col("b_max"), F.lit(int(_I64_MIN)))
-            )
-        )
-        ids = ub_df.mapInArrow(
-            rolling_kernel,
-            schema=f"{lanes_ddl}, t long, {', '.join(agg_ddl)}",
-        )
-    else:
-        if has_slices:
-            u = sliced.repartition(*[F.col(k) for k in knames], F.col("slc"))
-            # the sliced stream is consumed once (lazily, by the
-            # caller's action) — hand the split's input key-stream
-            # cache to the registry so the next op (or an explicit
-            # release_key_caches()) frees it after consumption
-            _ic = getattr(sliced, "_arcade_input_cache", None)
-            if _ic is not None:
-                _register_key_cache(_ic)
-        else:
-            u = keyed.repartition(*[F.col(k) for k in knames])
-        ids = u.mapInArrow(
-            rolling_kernel, schema=f"{lanes_ddl}, t long, {', '.join(agg_ddl)}"
-        )
-    out_cols = [
-        _group_key_out(F.col(kn), vt).alias(name)
-        for kn, vt, name in zip(knames, kvts, key_cols)
-    ]
+    out_cols = _lanes_select(kvts, key_cols)
     out_cols.append(_group_key_out(F.col("t"), kvts[g]).alias(ts_col))
-    if "count" in aggs:
-        out_cols.append(F.col("w_count"))
-    if "sum" in aggs:
-        out_cols.append(F.col("w_sum"))
-    if "avg" in aggs:
-        out_cols.append(F.col("w_avg"))
+    out_cols += [F.col(f"w_{a}") for a in ("count", "sum", "avg") if a in aggs]
     # min/max commute with the lane mapping, so restoring the agg
     # column's logical type (ts/date/bool) is exact
-    if "min" in aggs:
-        out_cols.append(
-            _group_key_out(F.col("w_min"), kvts[g + 1]).alias("w_min")
-        )
-    if "max" in aggs:
-        out_cols.append(
-            _group_key_out(F.col("w_max"), kvts[g + 1]).alias("w_max")
-        )
-    res = ids.select(*out_cols)
-    if key_cache is not None:
-        res._arcade_key_cache = key_cache
-    return res
+    out_cols += [
+        _group_key_out(F.col(f"w_{a}"), kvts[g + 1]).alias(f"w_{a}")
+        for a in ("min", "max") if a in aggs
+    ]
+    return ids.select(*out_cols)
 
 
 def window_shift(
@@ -4217,19 +3819,15 @@ def window_shift(
     lexsort + a clipped gather resolves every shift — no per-key loop,
     no payload movement beyond the single val lane.
 
-    Hot-key escape hatch (round-8, closing the r7 verdict's perf-weak
-    item — PLANS.md §9 family): a key with more than
-    ``hot_key_threshold`` rows pre-splits into range slices of its
-    FIRST order lane (equal lane values never straddle a slice), and
-    each present slice receives the ``offset`` rows that globally
-    precede it (``lag``; follow it, for ``lead``) as context rows via
-    a per-slice tail/head summary + driver stitch — by COUNT, not
-    window width, so carry volume is O(slices · offset). Output is
-    identical to the unsplit path. The split is skipped when the
-    manifest row total cannot exceed the threshold, when the first
-    order lane is binary (no range arithmetic), or when ``offset``
-    isn't far below the threshold (carry volume would approach the
-    data); ``hot_key_threshold=None`` disables.
+    Keys over ``hot_key_threshold`` rows split into range slices of the
+    FIRST order lane (``_keyed_window``; equal lane values never
+    straddle a slice). Stitch: carries — each slice receives the
+    ``offset`` rows that globally precede it (``lag``; follow it, for
+    ``lead``), taken by count from the slices' edge rows, so carry
+    volume is O(slices · offset). No split when the first order lane
+    is binary (no range arithmetic), when ``offset`` isn't far below
+    the threshold (carries would approach the data), or with
+    ``hot_key_threshold=None``.
 
     Rows with a null key component or null order component are dropped
     (document-level contract, same as sessionize); rows with a null
@@ -4242,7 +3840,6 @@ def window_shift(
     int64 keys and are restored exactly — bits.float_order_keys is an
     involution). Output: key columns, order columns, ``val_col``,
     ``shifted``."""
-    import pyarrow as pa
     from arcade_spark.partread import key_rowid_parts
 
     key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
@@ -4258,7 +3855,7 @@ def window_shift(
     g = len(key_cols)
     m = len(order_cols)
     lane_cols = key_cols + order_cols + [val_col]
-    vts = _lane_vtypes(spark, out_dir, lane_cols)
+    vts = _lane_vtypes(out_dir, lane_cols)
     for c, vt in zip(key_cols, vts[:g]):
         if vt in ("double", "float"):
             raise NotImplementedError(
@@ -4277,278 +3874,129 @@ def window_shift(
     keyed = keyed.filter(
         F.expr(" AND ".join(f"k{i} IS NOT NULL" for i in range(g + m)))
     )
-    k_bin = [vt in ("str", "binary") for vt in kvts[:g]]
-    o_bin = [vt in ("str", "binary") for vt in kvts[g:g + m]]
+    lane_bin = [vt in ("str", "binary") for vt in kvts]
+    k_bin, o_bin, v_bin = lane_bin[:g], lane_bin[g:g + m], lane_bin[g + m]
     o_float = [vt in ("double", "float") for vt in kvts[g:g + m]]
-    v_bin = kvts[g + m] in ("str", "binary")
     v_float = kvts[g + m] in ("double", "float")
     knames = [f"k{i}" for i in range(g)]
     onames = [f"k{g + i}" for i in range(m)]
     off = int(offset)
     is_lag = direction == "lag"
-    all_lanes = [f"k{i}" for i in range(g + m + 1)]
+    edge_names = [f"k{i}" for i in range(g + m + 1)] + ["rid"]
 
-    def _sorted_state(tbl, with_slices: bool):
-        """Shared lexsort + run bookkeeping for the shift/summary
-        kernels: returns (order, change, slc_sorted-or-None, plus the
-        loaded lanes)."""
-        nr = tbl.num_rows
+    def sorted_lanes(tbl):
         kl = _win_lanes(tbl, knames, k_bin)
         ol = _win_lanes(tbl, onames, o_bin)
-        rid = tbl.column("rid").to_numpy(zero_copy_only=False).astype(np.int64)
-        slc = None
-        # order lanes have no nulls (filtered above), so their isn keys
-        # are skipped; binary lanes sort by their per-task dense codes
-        # (np.unique is lexicographic, matching bytewise ORDER BY)
-        keys = [rid]
-        for _isn, oval, _o in reversed(ol):
-            keys.append(oval)
-        if with_slices:
-            slc = (
-                tbl.column("slc").to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            keys.append(slc)
-        for isn, val, _o in reversed(kl):
-            keys.append(val)
-            keys.append(isn)
-        order = np.lexsort(tuple(keys))
-        change = np.zeros(nr, dtype=bool)
-        change[0] = True
-        for isn, val, _o in kl:
-            vs = val[order]
-            change[1:] |= vs[1:] != vs[:-1]
-        if with_slices:
-            # a slice boundary is a run boundary: carry rows supply the
-            # cross-boundary context, the shift never crosses it
-            ss = slc[order]
-            change[1:] |= ss[1:] != ss[:-1]
-        return order, change, slc, kl, ol, rid
+        # order lanes have no nulls (filtered above), so their is_null
+        # lanes are skipped; binary lanes sort by their per-task dense
+        # codes (lexicographic, matching bytewise ORDER BY)
+        order, change = _sort_runs(
+            tbl, kl, [v for _isn, v, _o in ol] + [_i64(tbl, "rid")]
+        )
+        return kl, ol, order, change
 
-    def make_shift_kernel(with_slices: bool):
-        def shift_kernel(batches):
-            from arcade_spark.bits import float_order_keys
+    def kernel(batches):
+        from arcade_spark.bits import float_order_keys
 
-            chunks = [pa.Table.from_batches([b]) for b in batches]
-            if not chunks:
-                return
-            tbl = pa.concat_tables(chunks).combine_chunks()
-            nr = tbl.num_rows
-            if nr == 0:
-                return
-            order, change, _slc, kl, ol, _rid = _sorted_state(
-                tbl, with_slices
+        tbl = _task_table(batches)
+        if tbl is None:
+            return
+        kl, ol, order, change = sorted_lanes(tbl)
+        (v_isn, v_val, v_obj), = _win_lanes(tbl, [f"k{g + m}"], [v_bin])
+        nr = order.size
+        idx = np.arange(nr, dtype=np.int64)
+        run_start, run_end = _run_bounds(change)
+        src = idx - off if is_lag else idx + off
+        valid = src >= run_start if is_lag else src < run_end
+        src_c = np.clip(src, 0, nr - 1)
+        v_isn_s = v_isn[order]
+        shift_null = ~valid | (v_isn_s[src_c] == 1)
+        # carried context rows (emit=false) only feed their slice's shifts
+        emit = (tbl.column("emit").to_numpy(zero_copy_only=False)
+                .astype(bool)[order]
+                if "emit" in tbl.column_names else slice(None))
+        sel = order[emit]
+        cols_out = _lanes_out(kl, sel)
+        for lane, fl in zip(ol, o_float):
+            cols_out += (
+                [pa.array(float_order_keys(lane[1][sel]).view(np.float64))]
+                if fl else _lanes_out([lane], sel)
             )
-            (v_isn, v_val, v_obj), = _win_lanes(tbl, [f"k{g + m}"], [v_bin])
-            idx = np.arange(nr, dtype=np.int64)
-            run_start = np.maximum.accumulate(np.where(change, idx, 0))
-            if is_lag:
-                src = idx - off
-                valid = src >= run_start
-            else:
-                starts = np.nonzero(change)[0]
-                run_end = np.repeat(
-                    np.append(starts[1:], nr), np.diff(np.append(starts, nr))
-                )
-                src = idx + off
-                valid = src < run_end
-            src_c = np.clip(src, 0, nr - 1)
-            v_isn_s = v_isn[order]
-            shift_null = ~valid | (v_isn_s[src_c] == 1)
-            if with_slices:
-                emit = (
-                    tbl.column("emit").to_numpy(zero_copy_only=False)
-                    .astype(bool)[order]
-                )
-            else:
-                emit = slice(None)  # all rows
-            cols_out = []
-            for (isn, val, obj), b in zip(kl, k_bin):
-                if b:
-                    cols_out.append(
-                        pa.array(obj[order][emit], type=pa.binary())
-                    )
-                else:
-                    cols_out.append(pa.array(val[order][emit]))
-            for (isn, oval, obj), b, fl in zip(ol, o_bin, o_float):
-                if b:
-                    cols_out.append(
-                        pa.array(obj[order][emit], type=pa.binary())
-                    )
-                elif fl:
-                    cols_out.append(pa.array(
-                        float_order_keys(oval[order]).view(np.float64)[emit]
-                    ))
-                else:
-                    cols_out.append(pa.array(oval[order][emit]))
-            if v_bin:
-                v_obj_s = v_obj[order]
-                cols_out.append(pa.array(v_obj_s[emit], type=pa.binary()))
-                cols_out.append(pa.array(
-                    v_obj_s[src_c][emit], type=pa.binary(),
-                    mask=shift_null[emit],
-                ))
-            else:
-                v_val_s = v_val[order]
-                if v_float:
-                    # the lane carries order-preserving int64 keys
-                    # (bits.float_order_keys is an involution — apply it
-                    # again and reinterpret to restore the exact doubles)
-                    v_val_s = float_order_keys(v_val_s).view(np.float64)
-                cols_out.append(
-                    pa.array(v_val_s[emit], mask=(v_isn_s == 1)[emit])
-                )
-                cols_out.append(
-                    pa.array(v_val_s[src_c][emit], mask=shift_null[emit])
-                )
-            yield pa.RecordBatch.from_arrays(
-                cols_out, names=[*knames, *onames, "v", "s"]
-            )
-
-        return shift_kernel
+        if v_bin:
+            v_s = v_obj[order]
+            cols_out += [
+                pa.array(v_s[emit], type=pa.binary()),
+                pa.array(v_s[src_c][emit], type=pa.binary(),
+                         mask=shift_null[emit]),
+            ]
+        else:
+            v_s = v_val[order]
+            if v_float:
+                # the lane carries order-preserving int64 keys
+                # (bits.float_order_keys is an involution — apply it
+                # again and reinterpret to restore the exact doubles)
+                v_s = float_order_keys(v_s).view(np.float64)
+            cols_out += [
+                pa.array(v_s[emit], mask=(v_isn_s == 1)[emit]),
+                pa.array(v_s[src_c][emit], mask=shift_null[emit]),
+            ]
+        yield pa.RecordBatch.from_arrays(
+            cols_out, names=[*knames, *onames, "v", "s"]
+        )
 
     def edge_kernel(batches):
-        """Per present (hot key, slice): the ``off`` rows at the slice's
-        trailing (lag) / leading (lead) edge in sort order, with their
-        raw lanes — the driver stitches these into per-slice carries."""
-        chunks = [pa.Table.from_batches([b]) for b in batches]
-        if not chunks:
+        # per sliced (key, slc): the `off` rows at its trailing (lag) /
+        # leading (lead) edge in sort order, with their raw lanes
+        tbl = _task_table(batches)
+        if tbl is None:
             return
-        tbl = pa.concat_tables(chunks).combine_chunks()
-        nr = tbl.num_rows
-        if nr == 0:
-            return
-        order, change, _slc, _kl, _ol, _rid = _sorted_state(tbl, True)
-        nsl = (
-            tbl.column("nsl").to_numpy(zero_copy_only=False)
-            .astype(np.int64)
-        )
-        starts = np.nonzero(change)[0]
-        ends = np.append(starts[1:], nr)
-        keep = nsl[order][starts] > 1
+        _kl, _ol, order, change = sorted_lanes(tbl)
+        starts, ends, keep = _sliced_runs(tbl, order, change)
         rs, re_ = starts[keep], ends[keep]
-        if rs.size == 0:
-            return
-        sel_parts = []
-        for s0, e0 in zip(rs, re_):
-            take = min(off, int(e0 - s0))
-            sel_parts.append(
-                order[e0 - take:e0] if is_lag else order[s0:s0 + take]
-            )
-        sel = np.concatenate(sel_parts)
-        take_idx = pa.array(sel, type=pa.int64())
-        arrays = [
-            tbl.column(c).combine_chunks().take(take_idx)
-            for c in all_lanes + ["rid", "slc"]
-        ]
-        yield pa.RecordBatch.from_arrays(arrays, names=all_lanes + ["rid", "slc"])
+        if rs.size:
+            take = np.minimum(off, re_ - rs)
+            sel = np.concatenate([
+                order[e - t:e] if is_lag else order[s:s + t]
+                for s, e, t in zip(rs, re_, take)
+            ])
+            yield from tbl.select([*edge_names, "slc"]).take(sel).to_batches()
 
-    def _lane_ddl(b: bool, fl: bool) -> str:
+    def carries(kv, rows):
+        buf: list = []
+        slices = [(s, [_row_key(r, edge_names) for r in grp])
+                  for s, grp in groupby(rows, key=lambda r: r["slc"])]
+        for s, edge in (slices if is_lag else reversed(slices)):
+            yield from ((*row, s) for row in buf)
+            buf = (buf + edge)[-off:] if is_lag else (edge + buf)[:off]
+
+    def _ddl(b: bool, fl: bool) -> str:
         return "binary" if b else ("double" if fl else "long")
 
-    lanes_ddl = ", ".join(
-        [f"{k} {_lane_ddl(b, False)}" for k, b in zip(knames, k_bin)]
-        + [
-            f"{o} {_lane_ddl(b, fl)}"
-            for o, b, fl in zip(onames, o_bin, o_float)
-        ]
+    lanes = ", ".join(
+        [f"{k} {_ddl(b, False)}" for k, b in zip(knames, k_bin)]
+        + [f"{o} {_ddl(b, fl)}" for o, b, fl in zip(onames, o_bin, o_float)]
     )
-    v_ddl = _lane_ddl(v_bin, v_float)
-
-    sliced = None
-    _rb = (_manifest_total_rows(out_dir)
-           if hot_key_threshold is not None else 0)
-    if (
-        hot_key_threshold is not None
-        and not o_bin[0]  # no range arithmetic over binary lanes
-        and off * 8 <= hot_key_threshold  # carry stays far below data
-        and _rb > hot_key_threshold
-    ):
-        sliced, _n_hot = _split_hot_keys(
-            spark, keyed, knames, k_bin, f"k{g}",
-            overlap=0, threshold=hot_key_threshold, row_bound=_rb,
-        )
-    if sliced is not None:
-        from pyspark import StorageLevel
-
-        release_key_caches()
-        # persist the UN-repartitioned slice stream: the edge pass and
-        # the final pass each repartition it by (key, slc) themselves —
-        # the final pass must shuffle the carry union anyway so the
-        # carries land in their target slice's task
-        u = sliced.persist(StorageLevel.MEMORY_AND_DISK)
-        _register_key_cache(u)
-        raw_lane_ddl = ", ".join(
-            f"k{i} {'binary' if vt in ('str', 'binary') else 'long'}"
-            for i, vt in enumerate(kvts)
-        )
-        edges = (
-            u.repartition(*[F.col(k) for k in knames], F.col("slc"))
-            .mapInArrow(
-                edge_kernel, schema=f"{raw_lane_ddl}, rid long, slc long"
-            ).collect()
-        )
-        _ic = getattr(sliced, "_arcade_input_cache", None)
-        if _ic is not None:
-            _ic.unpersist()
-        from collections import defaultdict
-
-        per_key: dict[tuple, list] = defaultdict(list)
-        lane_names = all_lanes + ["rid"]
-        for r in edges:
-            kv = _row_key(r, knames)
-            per_key[kv].append((int(r["slc"]), _row_key(r, lane_names)))
-        carry_rows = []
-        for kv, lst in per_key.items():
-            by_slc: dict[int, list] = defaultdict(list)
-            for s, row in lst:
-                by_slc[s].append(row)  # edge rows arrive in sort order
-            buf: list = []
-            it = sorted(by_slc) if is_lag else sorted(by_slc, reverse=True)
-            for s in it:
-                for row in buf:
-                    carry_rows.append((*row, s))
-                if is_lag:
-                    buf = (buf + by_slc[s])[-off:]
-                else:
-                    buf = (by_slc[s] + buf)[:off]
-        if carry_rows:
-            carries = spark.createDataFrame(
-                carry_rows, schema=f"{raw_lane_ddl}, rid long, slc long"
-            ).select(
-                *all_lanes, "rid", "slc",
-                F.lit(False).alias("emit"), F.lit(2).cast("long").alias("nsl"),
-            )
-            ub = u.unionByName(carries)
-        else:
-            ub = u
-        ids = ub.repartition(
-            *[F.col(k) for k in knames], F.col("slc")
-        ).mapInArrow(
-            make_shift_kernel(True), schema=f"{lanes_ddl}, v {v_ddl}, s {v_ddl}"
-        )
-    else:
-        u = keyed.repartition(*[F.col(k) for k in knames])
-        ids = u.mapInArrow(
-            make_shift_kernel(False), schema=f"{lanes_ddl}, v {v_ddl}, s {v_ddl}"
-        )
-
-    def _restore(col, vt):
-        if vt in ("double", "float"):
-            return col.cast(spark_type_for(vt))
-        return _group_key_out(col, vt)
-
+    v_ddl = _ddl(v_bin, v_float)
+    edge_ddl = f"{_lanes_ddl(edge_names[g:-1], lane_bin[g:])}, rid long, slc long"
+    ids, _split = _keyed_window(
+        spark, keyed, knames, k_bin, f"k{g}", [out_dir],
+        hot_key_threshold if (
+            hot_key_threshold is not None
+            and not o_bin[0]  # no range arithmetic over binary lanes
+            and off * 8 <= hot_key_threshold  # carry stays far below data
+        ) else None,
+        kernel, f"{lanes}, v {v_ddl}, s {v_ddl}",
+        stitch=_Stitch(
+            lambda u: u.repartition(*knames, "slc").mapInArrow(
+                edge_kernel, f"{_lanes_ddl(knames, k_bin)}, {edge_ddl}"),
+            carries, edge_ddl,
+        ),
+    )
     return ids.select(
-        *[
-            _group_key_out(F.col(kn), vt).alias(name)
-            for kn, vt, name in zip(knames, kvts, key_cols)
-        ],
-        *[
-            _restore(F.col(on), vt).alias(name)
-            for on, vt, name in zip(onames, kvts[g:g + m], order_cols)
-        ],
-        _restore(F.col("v"), kvts[g + m]).alias(val_col),
-        _restore(F.col("s"), kvts[g + m]).alias("shifted"),
+        *_lanes_select(kvts[:g], key_cols),
+        *_lanes_select(kvts[g:g + m], order_cols, first=g),
+        _group_key_out(F.col("v"), kvts[g + m]).alias(val_col),
+        _group_key_out(F.col("s"), kvts[g + m]).alias("shifted"),
     )
 
 

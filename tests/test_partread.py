@@ -483,3 +483,24 @@ def test_crosscheck_or_trees_random(spark, table):
             "url",
         ]
         assert sorted(got["url"]) == sorted(want)
+
+
+def test_manifest_without_format_rev_asks_for_reencode(tmp_path):
+    """A manifest written before format_rev existed is refused with a
+    ValueError that says to re-encode, before any Spark job."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from arcade_spark.partread import load_manifest
+
+    mdir = tmp_path / "manifest"
+    mdir.mkdir()
+    pq.write_table(
+        pa.table({"part_id": [0], "n_rows": [3],
+                  "columns": [json.dumps([["x", "int"]])]}),
+        mdir / "part-0.parquet",
+    )
+    with pytest.raises(ValueError, match="re-encode"):
+        load_manifest(str(tmp_path))
